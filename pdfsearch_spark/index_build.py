@@ -353,20 +353,6 @@ def extract_documents_sharded(pages_with_ids: DataFrame) -> DataFrame:
     return pages_with_ids.mapInPandas(fn, schema=DOCROW_SCHEMA)
 
 
-def extract_documents(pages: DataFrame, n_shards: int) -> DataFrame:
-    """Narrow (no shuffle, no dedup) ids+extract composition — kept as the
-    standalone extraction API; the build/refresh hot paths instead shuffle
-    raw pages first and use extract_documents_sharded so extraction lands
-    AFTER the exchange, fused with dedup."""
-
-    def fn(it):
-        for pdf in it:
-            if len(pdf):
-                yield _extract_batch(pdf)
-
-    return ids_and_shards(pages, n_shards).mapInPandas(fn, schema=DOCROW_SCHEMA)
-
-
 class _ShardMetricsParam(AccumulatorParam):
     """Sums {shard: [sec, n_postings, n_terms, postings_bytes, pos_bytes]}."""
 
@@ -437,7 +423,7 @@ def encode_docs_partitions(avgdl: float, metrics_acc=None, segment: int = 0):
                 chain.from_iterable(l for l in tok_lists if l)
             )
             n_tok = int(counts_k.sum())
-            codes, uniques = pd.factorize(all_toks)
+            codes, uniques = pd.factorize(np.array(all_toks, dtype=object))
             nd = len(counts_k)
             doc_ord = np.repeat(np.arange(nd, dtype=np.int64), counts_k)
             starts = np.zeros(nd, dtype=np.int64)

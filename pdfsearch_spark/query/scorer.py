@@ -453,11 +453,17 @@ def score_shard(
     dfs: dict[int, int] | None,
     k: int,
 ):
-    """Run the query against one shard.
+    """Match one query against one shard's pruned postings.
 
-    Returns (matched_docs, dls, tf_vis_matrix, local_dfs) — scoring to floats
-    happens here only when ``dfs`` (global per-phrase df) is provided;
-    otherwise the caller is in the df-collection pass.
+    Returns None when no phrase has a posting in the shard, else
+    (matched_docs, dls, tf_vis_matrix, local_dfs): the docs matching the
+    whole tree, their lengths, their visible per-phrase instance counts, and
+    each phrase's in-shard df (docs with ≥1 instance, tree-independent).
+    Scoring is the caller's: with a-priori idfs via ``bm25_scores``, or after
+    the global df reduce. ``expansions`` may pin prefix expansions (callers
+    pass ``{}``: prefixes expand against the shard's own terms). ``n_docs``,
+    ``avgdl``, ``dfs`` and ``k`` are unread; they stay only to keep the
+    positional signature that perfbench/kernels.py calls.
     """
     # Per-shard prefix expansion (driver passes NO expansion list): the
     # postings scan already restricted this shard's rows to
@@ -534,10 +540,19 @@ def score_shard(
     return matched, mdl, mvis, local_dfs
 
 
-def _tree_has_near(node: Node) -> bool:
+def tree_has_no_near(node: Node) -> bool:
     if node.op == "NEAR":
+        return False
+    return all(tree_has_no_near(c) for c in node.children)
+
+
+def tree_is_pure_and(node: Node) -> bool:
+    """True iff the tree is a conjunction of plain phrases (no OR/NOT/NEAR)."""
+    if node.op == "PHRASE":
         return True
-    return any(_tree_has_near(c) for c in node.children)
+    if node.op == "AND":
+        return all(tree_is_pure_and(c) for c in node.children)
+    return False
 
 
 def _near_phrase_indexes(node: Node) -> set[int]:

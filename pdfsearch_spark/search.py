@@ -1,43 +1,73 @@
 """Query-side engine: FTS5-grammar search over the sharded index.
 
-Spark lifecycle (SURVEY.md §3.B): parse/plan on the driver → shard-pruned,
-term-pruned parquet scan of ``postings`` (predicate pushdown on the sorted
-``term`` column) → per-shard applyInPandas match+score (shuffle-free: all of
-a doc's postings are in its shard) → global ``orderBy(score, doc_id).limit(k)``
-(TakeOrderedAndProject over ≤ shards×k pre-reduced rows) → point lookup into
-the doc store (column-pruned) for display fields → snippet UDF over ≤ k rows.
+``search`` (one query) and ``search_batch`` (many) run one executor,
+``match_score``, over a list of parsed queries:
 
-Two physical strategies, picked per query shape:
+1. Plan (driver). Each query is classified once:
+   - a pure conjunction of plain terms runs block-max WAND per shard;
+   - any other tree of plain terms (OR / NOT) is scored exhaustively per
+     shard. Both use a-priori idfs — dfs come from the postings table's own
+     (term, df) columns (``_dfs_of``, cached per engine) — and emit only
+     their per-shard top-k;
+   - phrase / prefix / NEAR / anchor queries: a phrase's global df is only
+     known after matching, so shards emit the matched rows (doc_id, dl,
+     visible-tf vector) plus one df-sentinel row.
+2. One shard operator. One shard-pruned, term-pruned parquet scan of
+   ``postings`` (every query's terms and prefixes pushed down on the sorted
+   ``term`` column) feeds one ``groupBy(shard).applyInPandas``, which also
+   applies the optional book filter. Past that exchange the work is
+   shuffle-free: all of a doc's postings are in its shard.
+3. One reduce. When the plan has a sentinel query, its per-shard dfs are
+   summed on the driver and one codegen'd BM25 expression scores its
+   matched rows; a plan without one issues no sentinel action. The top k of
+   each query by (score asc, doc_id asc) reaches the driver:
+   TakeOrderedAndProject for one query, a row_number window for several.
 
-- FAST path (all phrases are plain single terms — the common case): global
-  dfs come from the postings table's own (term, df) metadata columns before
-  the scan (format 6: no separate term_stats table — the pruned dictionary
-  read hits the same sorted-term row groups the scoring scan does, and the
-  ≤ shards×terms per-shard rows sum driver-side), so each shard scores
-  locally and emits only its top-k. Network cost: shards×k tiny rows.
-- GENERAL path (phrase / prefix / NEAR / anchor): per-phrase global df is
-  only known after matching, so shards emit matched rows (doc_id, dl,
-  visible-tf vector) plus one df-sentinel row; dfs reduce to idfs, and
-  scoring runs as a whole-stage-codegen Spark expression over the matched
-  rows — no second pass over postings.
+``search`` then reads its ≤ k docs from the doc store in one point lookup and
+renders snippets driver-side.
 """
 
 from __future__ import annotations
 
 import os
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from .analyzer import tokenize, unicode61_tokens
 from .index_build import INDEX_FORMAT, shard_of, table_dir
-from .query.parser import Node, Phrase, QuerySyntaxError, parse_query
-from .query.scorer import K1, B, bm25_scores, idf_of, score_shard, wand_shard_topk
+from .query.parser import Node, Phrase, parse_query
+from .query.scorer import (
+    K1,
+    B,
+    bm25_scores,
+    idf_of,
+    score_shard,
+    tree_has_no_near,
+    tree_is_pure_and,
+    wand_shard_topk,
+)
 
 RESULT_SCHEMA = (
     "doc_id long, part int, title string, text string, base_name string, score double"
 )
+BATCH_SCHEMA = "query_id int, doc_id long, score double, rank int"
+# shard-operator rows: pre-scored (score set), matched (vis set, scored in the
+# reduce) or a df sentinel (dfs set)
+_SHARD_SCHEMA = (
+    "query_id int, doc_id long, score double, dl long, vis array<long>, dfs array<long>"
+)
+
+
+class _Planned(NamedTuple):
+    qid: int
+    tree: Node
+    phrases: list[Phrase]
+    idfs: np.ndarray | None  # a-priori idfs; None = df-sentinel query
+    wand: bool
 
 
 class SearchEngine:
@@ -73,9 +103,6 @@ class SearchEngine:
         self._doc_text = spark.read.parquet(
             table_dir(index_dir, "doc_text", self.epoch)
         )
-        # the narrow doc catalog == column-pruned doc_text (text chunks are
-        # never read; same partition pruning the former table had)
-        self._documents = self._doc_text.drop("text")
         # Driver-side df cache. An engine is bound to one index snapshot
         # (Spark caches the parquet file listing at first action; a refresh
         # needs a new SearchEngine), so term→df results are immutable for
@@ -101,8 +128,35 @@ class SearchEngine:
 
     # ---- planning -----------------------------------------------------
 
-    def _plan(self, query: str):
-        return parse_query(query, tokenize, unicode61_tokens)
+    @staticmethod
+    def _parse(queries: list[str]) -> list[tuple[int, Node, list[Phrase]]]:
+        """(query_id, tree, phrases) per query; empty queries and queries
+        that parse to nothing (e.g. '""') are dropped. Grammar errors raise
+        QuerySyntaxError (HTTP 400 in the reference)."""
+        parsed = []
+        for qid, q in enumerate(queries):
+            if q and q.strip():
+                tree, phrases = parse_query(q, tokenize, unicode61_tokens)
+                if tree is not None:
+                    parsed.append((qid, tree, phrases))
+        return parsed
+
+    def _plan(self, parsed: list[tuple[int, Node, list[Phrase]]]) -> list[_Planned]:
+        """Classify each query once. Plain-term trees without NEAR get
+        a-priori idfs from ONE dictionary lookup over all their terms."""
+        plain = {qid for qid, tree, phrases in parsed if _plain_terms(tree, phrases)}
+        dfs = self._dfs_of(
+            sorted({p.terms[0] for qid, _, phrases in parsed if qid in plain for p in phrases})
+        )
+        plan = []
+        for qid, tree, phrases in parsed:
+            idfs = None
+            if qid in plain:
+                idfs = np.array([idf_of(dfs[p.terms[0]], self.n_docs) for p in phrases])
+            plan.append(
+                _Planned(qid, tree, phrases, idfs, idfs is not None and tree_is_pure_and(tree))
+            )
+        return plan
 
     @staticmethod
     def _scan_predicate(phrases: list[Phrase]):
@@ -131,6 +185,139 @@ class SearchEngine:
 
     # ---- execution ----------------------------------------------------
 
+    def _shard_op(
+        self, plan: list[_Planned], k: int, book_ids: list[int] | None = None
+    ) -> DataFrame | None:
+        """The one shard operator: every planned query against each shard's
+        pruned postings, in one ``applyInPandas`` call per shard. None when
+        no query can touch the index (all phrases unindexed)."""
+        cond = self._scan_predicate([p for e in plan for p in e.phrases])
+        if cond is None:
+            return None
+        n_docs, avgdl = self.n_docs, self.avgdl
+        books = np.array(sorted(book_ids), dtype=np.int64) if book_ids else None
+
+        def rows(qid, doc_ids, score=np.nan, dl=0, vis=None, dfs=None):
+            n = len(doc_ids)
+            return pd.DataFrame(
+                {
+                    "query_id": np.full(n, qid, dtype=np.int32),
+                    "doc_id": np.asarray(doc_ids, dtype=np.int64),
+                    "score": score,
+                    "dl": dl,
+                    # object dtype even when empty (a float column of no
+                    # rows cannot convert to an Arrow list)
+                    "vis": pd.Series(vis if vis is not None else [None] * n, dtype=object),
+                    "dfs": pd.Series([dfs] * n, dtype=object),
+                }
+            )
+
+        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+            outs = []
+            for qid, tree, phrases, idfs, wand in plan:
+                if wand:
+                    res = wand_shard_topk(
+                        pdf, [p.terms[0] for p in phrases], idfs, avgdl, k, books
+                    )
+                    if res is not None:
+                        outs.append(rows(qid, res[0], score=res[1]))
+                    continue
+                res = score_shard(pdf, tree, phrases, {}, n_docs, avgdl, None, k)
+                if res is None:
+                    continue
+                matched, mdl, mvis, local_dfs = res
+                if books is not None:
+                    sel = np.isin(matched, books)
+                    matched, mdl, mvis = matched[sel], mdl[sel], mvis[sel]
+                if idfs is None:
+                    outs.append(rows(qid, matched, dl=mdl, vis=list(mvis)))
+                    sentinel = [local_dfs.get(i, 0) for i in range(len(phrases))]
+                    outs.append(rows(qid, [0], dfs=sentinel))
+                    continue
+                scores = bm25_scores(mvis, mdl, idfs, avgdl)
+                # tie-deterministic truncation by (score, doc_id) — the same
+                # total order as the reduce — so a score plateau crossing
+                # the k boundary keeps the same members on every path
+                # (tests/test_boundary_ties.py)
+                top = np.lexsort((matched, scores))[:k]
+                outs.append(rows(qid, matched[top], score=scores[top]))
+            return pd.concat(outs, ignore_index=True) if outs else rows(0, [])
+
+        return (
+            self._postings.filter(cond)
+            .groupBy("shard")
+            .applyInPandas(fn, schema=_SHARD_SCHEMA)
+        )
+
+    def match_score(
+        self,
+        parsed: list[tuple[int, Node, list[Phrase]]],
+        k: int,
+        book_ids: list[int] | None = None,
+    ) -> list[tuple[int, int, float]]:
+        """The executor: the ≤ k best (query_id, doc_id, score) of each
+        parsed query, sorted by (query_id, score, doc_id)."""
+        plan = self._plan(parsed)
+        out = self._shard_op(plan, k, book_ids)
+        if out is None:
+            return []
+        sentinel = [e for e in plan if e.idfs is None]
+        if sentinel:
+            # the df reduce and the top-k both read the one match pass
+            out = out.persist()
+        try:
+            scored = out.filter(F.col("dfs").isNull())
+            if sentinel:
+                # ≤ shards rows per query; global df = their sum
+                stats = out.filter(F.col("dfs").isNotNull()).select("query_id", "dfs").collect()
+                dfs: dict[int, np.ndarray] = {}
+                for r in stats:
+                    dfs[r["query_id"]] = dfs.get(r["query_id"], 0) + np.array(r["dfs"])
+                idf_map = []
+                for e in sentinel:
+                    d = dfs.get(e.qid, np.zeros(len(e.phrases), dtype=np.int64))
+                    idf_sql = ",".join(f"{idf_of(int(x), self.n_docs)!r}D" for x in d)
+                    idf_map.append(f"{e.qid}, array({idf_sql})")
+                score_expr = (
+                    f"-aggregate(zip_with(vis, map({', '.join(idf_map)})[query_id], "
+                    f"(t, f) -> CASE WHEN t > 0 THEN f * t * {K1 + 1.0}D / "
+                    f"(t + {K1}D * ({1.0 - B}D + {B}D * dl / {self.avgdl}D)) "
+                    f"ELSE 0D END), 0D, (a, x) -> a + x)"
+                )
+                scored = scored.withColumn("score", F.coalesce("score", F.expr(score_expr)))
+            scored = scored.select("query_id", "doc_id", "score")
+            if len(plan) == 1:
+                top = scored.orderBy("score", "doc_id").limit(k).collect()
+            else:
+                w = Window.partitionBy("query_id").orderBy("score", "doc_id")
+                top = (
+                    scored.withColumn("rank", F.row_number().over(w))
+                    .filter(F.col("rank") <= k)
+                    .collect()
+                )
+        finally:
+            if sentinel:
+                out.unpersist()
+        return sorted(
+            ((r["query_id"], r["doc_id"], r["score"]) for r in top),
+            key=lambda t: (t[0], t[2], t[1]),
+        )
+
+    def lookup(self, ids: list[int], with_text: bool) -> dict:
+        """≤ k doc-store rows by doc_id in ONE point-lookup job. Literal id +
+        shard filters push down to parquet (partition pruning on shard,
+        row-group stats pruning on doc_id) — never a join whose other side
+        is a full table scan, the plan that dies at 10^12 docs. Without
+        ``with_text`` the text chunks are column-pruned away."""
+        shards = sorted({shard_of(i, self.n_shards) for i in ids})
+        cols = ["doc_id", "base_name"] + (["text"] if with_text else [])
+        rows = (
+            self._doc_text.filter(F.col("shard").isin(shards) & F.col("doc_id").isin(ids))
+            .select(*cols)
+            .collect()
+        )
+        return {r["doc_id"]: r for r in rows}
+
     def search(
         self,
         query: str,
@@ -143,215 +330,34 @@ class SearchEngine:
         intended Q6 doc-subset filter. Raises QuerySyntaxError (→ HTTP 400 in
         the reference). Empty query → empty result (routes/routes.go:108-110).
         """
-        spark = self.spark
-        if not query or not query.strip():
-            return spark.createDataFrame([], schema=RESULT_SCHEMA)
-
-        tree, phrases = self._plan(query)
-        cond = self._scan_predicate(phrases) if tree is not None else None
-        if cond is None:
-            return spark.createDataFrame([], schema=RESULT_SCHEMA)
-
-        postings = self._postings.filter(cond)
-
-        fast = all(
-            len(p.terms) == 1 and not p.prefix and not p.anchored and p.col != "unindexed"
-            for p in phrases
-        ) and tree_has_no_near(tree)
-
-        if fast:
-            scored = self._run_fast(postings, tree, phrases, k, book_ids)
+        parsed = self._parse([query])
+        top = self.match_score(parsed, k, book_ids)
+        ids = [d for _, d, _ in top]
+        docs = self.lookup(ids, with_snippets) if ids else {}
+        if with_snippets and ids:
+            # snippets are a ≤k-row presentation concern — driver-side, not a
+            # cluster stage (the reference computes them per emitted row too)
+            _, tree, phrases = parsed[0]
+            texts = [docs[i]["text"] if i in docs else "" for i in ids]
+            titles, bodies = self._snippet_pair(texts, tree, phrases)
         else:
-            scored = self._run_general(postings, tree, phrases, k, book_ids)
-
-        topk_rows = (
-            scored.orderBy(F.col("score").asc(), F.col("doc_id").asc()).limit(k).collect()
-        )
-        if not topk_rows:
-            return spark.createDataFrame([], schema=RESULT_SCHEMA)
-
-        # Result assembly over ≤k rows in ONE point-lookup job. Literal id +
-        # shard filters push down to parquet (partition pruning on shard,
-        # row-group stats pruning on doc_id) — never a join whose OTHER side
-        # is a full table scan: broadcasting `documents` or shuffling
-        # `doc_text` against a ≤200-row result is exactly the plan that dies
-        # at 10^12 docs. The snippet path reads doc_text (which carries
-        # base_name precisely so this stays one lookup); the no-snippet path
-        # reads the same store column-pruned (text chunks untouched).
-        ids = [int(r["doc_id"]) for r in topk_rows]
-        scores = [float(r["score"]) for r in topk_rows]
-        shards = sorted({shard_of(i, self.n_shards) for i in ids})
-        pruned = F.col("shard").isin(shards) & F.col("doc_id").isin(ids)
-        if with_snippets:
-            rows = (
-                self._doc_text.filter(pruned)
-                .select("doc_id", "base_name", "text")
-                .collect()
-            )
-            meta = {int(r["doc_id"]): r["base_name"] for r in rows}
-            texts = {int(r["doc_id"]): r["text"] for r in rows}
-            # snippets are a ≤k-row presentation concern — driver-side pandas,
-            # not a cluster stage (reference computes them per emitted row too)
-            titles, bodies = self._snippet_pair(
-                [texts.get(i, "") for i in ids], tree, phrases, {}
-            )
-        else:
-            meta = {
-                int(r["doc_id"]): r["base_name"]
-                for r in self._documents.filter(pruned)
-                .select("doc_id", "base_name")
-                .collect()
-            }
-            titles = [""] * len(ids)
-            bodies = [""] * len(ids)
-        out_pdf = pd.DataFrame(
+            titles = bodies = [""] * len(ids)
+        out = pd.DataFrame(
             {
                 "doc_id": pd.Series(ids, dtype="int64"),
-                "part": np.int32(0),
-                "title": titles,
-                "text": bodies,
-                "base_name": [meta.get(i) for i in ids],
-                "score": pd.Series(scores, dtype="float64"),
+                "part": np.zeros(len(ids), dtype=np.int32),
+                "title": pd.Series(titles, dtype="object"),
+                "text": pd.Series(bodies, dtype="object"),
+                "base_name": pd.Series(
+                    [docs[i]["base_name"] if i in docs else None for i in ids], dtype="object"
+                ),
+                "score": pd.Series([s for _, _, s in top], dtype="float64"),
             }
         )
-        return spark.createDataFrame(out_pdf, schema=RESULT_SCHEMA)
-
-    def _run_fast(self, postings, tree, phrases, k, book_ids):
-        """dfs known a priori → shard-local scoring + per-shard top-k.
-
-        Pure conjunctions (the dominant query shape) additionally run
-        block-max WAND: block metadata prunes postings blocks that cannot
-        beat the shard's bounded min-heap, so their bytes are never decoded
-        (north_rule; SURVEY.md §2.5 Q2). Boolean trees with OR/NOT score
-        exhaustively — visible-tf semantics there need every candidate.
-        Results are identical either way (tests/test_search.py A/B)."""
-        term_list = sorted({p.terms[0] for p in phrases})
-        df_rows = self._dfs_of(term_list)
-        idfs = np.array(
-            [idf_of(df_rows.get(p.terms[0], 0), self.n_docs) for p in phrases]
-        )
-        n_docs, avgdl = self.n_docs, self.avgdl
-        books = np.array(sorted(book_ids), dtype=np.int64) if book_ids else None
-        use_wand = tree_is_pure_and(tree)
-        phrase_terms = [p.terms[0] for p in phrases]
-        empty = lambda: pd.DataFrame(  # noqa: E731
-            {"doc_id": pd.Series(dtype="int64"), "score": pd.Series(dtype="float64")}
-        )
-
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            if use_wand:
-                res = wand_shard_topk(pdf, phrase_terms, idfs, avgdl, k, books)
-                if res is None:
-                    return empty()
-                doc_ids, scores = res
-                return pd.DataFrame({"doc_id": doc_ids, "score": scores})
-            res = score_shard(pdf, tree, phrases, {}, n_docs, avgdl, None, k)
-            if res is None:
-                return empty()
-            matched, mdl, mvis, _ = res
-            if books is not None:
-                sel = np.isin(matched, books)
-                matched, mdl, mvis = matched[sel], mdl[sel], mvis[sel]
-                if len(matched) == 0:
-                    return empty()
-            scores = bm25_scores(mvis, mdl, idfs, avgdl)
-            if len(scores) > k:
-                # tie-deterministic truncation: argpartition alone keeps
-                # ARBITRARY members of a score plateau crossing the k
-                # boundary, making this path disagree with the batch path
-                # on boundary docs (tests/test_boundary_ties.py). Order by
-                # (score, doc_id) — the same total order as the global
-                # reduce — so every path picks identical tie members.
-                order = np.lexsort((matched, scores))[:k]
-                matched, scores = matched[order], scores[order]
-            return pd.DataFrame({"doc_id": matched, "score": scores})
-
-        return postings.groupBy("shard").applyInPandas(fn, schema="doc_id long, score double")
-
-    def _run_general(self, postings, tree, phrases, k, book_ids):
-        """Match pass emits rows + df sentinels; scoring is a codegen'd
-        Spark expression after the tiny df reduce. Prefix phrases expand
-        per shard inside score_shard (no driver-side expansion)."""
-        P = len(phrases)
-        n_docs, avgdl = self.n_docs, self.avgdl
-        books = np.array(sorted(book_ids), dtype=np.int64) if book_ids else None
-
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame(
-                {
-                    "doc_id": pd.Series(dtype="int64"),
-                    "dl": pd.Series(dtype="int64"),
-                    "vis": pd.Series(dtype="object"),
-                    "dfs": pd.Series(dtype="object"),
-                    "is_stats": pd.Series(dtype="bool"),
-                }
-            )
-            res = score_shard(pdf, tree, phrases, {}, n_docs, avgdl, None, k)
-            if res is None:
-                return empty
-            matched, mdl, mvis, local_dfs = res
-            if books is not None:
-                sel = np.isin(matched, books)
-                matched, mdl, mvis = matched[sel], mdl[sel], mvis[sel]
-            rows = pd.DataFrame(
-                {
-                    "doc_id": matched,
-                    "dl": mdl,
-                    "vis": list(mvis),
-                    "dfs": [None] * len(matched),
-                    "is_stats": False,
-                }
-            )
-            stats = pd.DataFrame(
-                {
-                    "doc_id": [0],
-                    "dl": [0],
-                    "vis": [None],
-                    "dfs": [[int(local_dfs.get(i, 0)) for i in range(P)]],
-                    "is_stats": True,
-                }
-            )
-            return pd.concat([rows, stats], ignore_index=True)
-
-        out = postings.groupBy("shard").applyInPandas(
-            fn,
-            schema="doc_id long, dl long, vis array<long>, dfs array<long>, is_stats boolean",
-        )
-        out = out.persist()
-        try:
-            df_rows = (
-                out.filter(F.col("is_stats"))
-                .select(F.posexplode("dfs").alias("pos", "df"))
-                .groupBy("pos")
-                .agg(F.sum("df").alias("df"))
-                .collect()
-            )
-            dfs_total = {r["pos"]: int(r["df"]) for r in df_rows}
-            idfs = [idf_of(dfs_total.get(i, 0), self.n_docs) for i in range(P)]
-
-            idf_arr = "array({})".format(",".join(f"{v!r}D" for v in idfs))
-            score_expr = (
-                f"-aggregate(zip_with(vis, {idf_arr}, (t, f) -> "
-                f"CASE WHEN t > 0 THEN f * t * {K1 + 1.0}D / "
-                f"(t + {K1}D * ({1.0 - B}D + {B}D * dl / {self.avgdl}D)) "
-                f"ELSE 0D END), 0D, (a, x) -> a + x)"
-            )
-            scored = (
-                out.filter(~F.col("is_stats"))
-                .withColumn("score", F.expr(score_expr))
-                .select("doc_id", "score")
-            )
-            # materialize top-k before unpersisting the match pass
-            result = scored.orderBy(F.col("score").asc(), F.col("doc_id").asc()).limit(k)
-            rows = result.collect()
-        finally:
-            out.unpersist()
-        return self.spark.createDataFrame(rows, schema="doc_id long, score double") if rows else self.spark.createDataFrame([], schema="doc_id long, score double")
-
-    # ---- batched execution --------------------------------------------
+        return _local_frame(self.spark, out, RESULT_SCHEMA)
 
     def search_batch(self, queries: list[str], k: int = 10) -> DataFrame:
-        """Evaluate MANY queries in ONE shard-scan job.
+        """Evaluate MANY queries through the same executor as ``search``.
 
         Returns (query_id int, doc_id long, score double, rank int), rank
         1..k per query by (score asc = best BM25 first, doc_id asc) — the
@@ -362,188 +368,16 @@ class SearchEngine:
         query workload actually runs at cluster scale. Empty queries yield
         no rows; grammar errors raise (reference 400 behavior).
         """
-        spark = self.spark
-        parsed: list[tuple[int, Node, list[Phrase]]] = []
-        all_terms: set[str] = set()
-        prefixes: set[str] = set()
-        for qid, q in enumerate(queries):
-            if not q or not q.strip():
-                continue
-            tree, phrases = parse_query(q, tokenize, unicode61_tokens)
-            if tree is None:
-                continue  # query pruned to nothing (e.g. '""') — no rows
-            parsed.append((qid, tree, phrases))
-            for p in phrases:
-                if p.col == "unindexed":
-                    continue
-                if p.prefix:
-                    all_terms.update(p.terms[:-1])
-                    prefixes.add(p.terms[-1])
-                else:
-                    all_terms.update(p.terms)
-        if not parsed:
-            return spark.createDataFrame(
-                [], schema="query_id int, doc_id long, score double, rank int"
-            )
-
-        # ONE dictionary lookup for every query's EXACT terms (df → a-priori
-        # idfs for the WAND-able queries). Prefixes never touch the driver:
-        # they push startswith predicates into the scan and expand per shard
-        # inside score_shard.
-        df_map = self._dfs_of(sorted(all_terms)) if all_terms else {}
-
-        cond = F.col("term").isin(sorted(all_terms)) if all_terms else F.lit(False)
-        for pref in sorted(prefixes):
-            cond = cond | F.col("term").startswith(pref)
-        postings = self._postings.filter(cond)
-        # plan entry: (qid, tree, phrases, expansions, P, wand_idfs|None) —
-        # pure conjunctions of plain terms run block-max WAND per shard and
-        # emit only their per-shard top-k (scored); the rest emit matches +
-        # df sentinels and score in the codegen'd expression below.
-        plan = []
-        for qid, tree, phrases in parsed:
-            fast = all(
-                len(p.terms) == 1 and not p.prefix and not p.anchored
-                and p.col != "unindexed"
-                for p in phrases
-            ) and tree_is_pure_and(tree)
-            wand_idfs = (
-                np.array(
-                    [idf_of(df_map.get(p.terms[0], 0), self.n_docs) for p in phrases]
-                )
-                if fast
-                else None
-            )
-            plan.append((qid, tree, phrases, {}, len(phrases), wand_idfs))
-        n_docs, avgdl = self.n_docs, self.avgdl
-
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            outs = []
-            for qid, tree, phrases, exp, P, wand_idfs in plan:
-                if wand_idfs is not None:
-                    res = wand_shard_topk(
-                        pdf, [p.terms[0] for p in phrases], wand_idfs, avgdl, k
-                    )
-                    if res is None:
-                        continue
-                    doc_ids, scores = res
-                    outs.append(
-                        pd.DataFrame(
-                            {
-                                "query_id": np.int32(qid),
-                                "doc_id": doc_ids,
-                                "dl": np.int64(0),
-                                "vis": [None] * len(doc_ids),
-                                "dfs": [None] * len(doc_ids),
-                                "is_stats": False,
-                                "score": scores,
-                            }
-                        )
-                    )
-                    continue
-                res = score_shard(pdf, tree, phrases, exp, n_docs, avgdl, None, 0)
-                if res is None:
-                    continue
-                matched, mdl, mvis, local_dfs = res
-                rows = pd.DataFrame(
-                    {
-                        "query_id": np.int32(qid),
-                        "doc_id": matched,
-                        "dl": mdl,
-                        "vis": list(mvis),
-                        "dfs": [None] * len(matched),
-                        "is_stats": False,
-                        "score": np.nan,
-                    }
-                )
-                stats = pd.DataFrame(
-                    {
-                        "query_id": np.int32(qid),
-                        "doc_id": np.int64(0),
-                        "dl": np.int64(0),
-                        "vis": [None],
-                        "dfs": [[int(local_dfs.get(i, 0)) for i in range(P)]],
-                        "is_stats": True,
-                        "score": np.nan,
-                    }
-                )
-                outs.append(rows)
-                outs.append(stats)
-            if not outs:
-                return pd.DataFrame(
-                    {
-                        "query_id": pd.Series(dtype="int32"),
-                        "doc_id": pd.Series(dtype="int64"),
-                        "dl": pd.Series(dtype="int64"),
-                        "vis": pd.Series(dtype="object"),
-                        "dfs": pd.Series(dtype="object"),
-                        "is_stats": pd.Series(dtype="bool"),
-                        "score": pd.Series(dtype="float64"),
-                    }
-                )
-            return pd.concat(outs, ignore_index=True)
-
-        matched = postings.groupBy("shard").applyInPandas(
-            fn,
-            schema=(
-                "query_id int, doc_id long, dl long, vis array<long>, "
-                "dfs array<long>, is_stats boolean, score double"
-            ),
-        )
-        matched = matched.persist()
-        try:
-            df_rows = (
-                matched.filter(F.col("is_stats"))
-                .select("query_id", F.posexplode("dfs").alias("pos", "df"))
-                .groupBy("query_id", "pos")
-                .agg(F.sum("df").alias("df"))
-                .collect()
-            )
-            dfs_by_q: dict[int, dict[int, int]] = {}
-            for r in df_rows:
-                dfs_by_q.setdefault(r["query_id"], {})[r["pos"]] = int(r["df"])
-            idf_rows = [
-                (qid, [idf_of(dfs_by_q.get(qid, {}).get(i, 0), n_docs) for i in range(P)])
-                for qid, _t, _p, _e, P, wand_idfs in plan
-                if wand_idfs is None
-            ]
-            idf_df = self.spark.createDataFrame(
-                idf_rows, schema="query_id int, idfs array<double>"
-            )
-            score_expr = (
-                f"-aggregate(zip_with(vis, idfs, (t, f) -> "
-                f"CASE WHEN t > 0 THEN f * t * {K1 + 1.0}D / "
-                f"(t + {K1}D * ({1.0 - B}D + {B}D * dl / {self.avgdl}D)) "
-                f"ELSE 0D END), 0D, (a, x) -> a + x)"
-            )
-            from pyspark.sql import Window
-
-            w = Window.partitionBy("query_id").orderBy(
-                F.col("score").asc(), F.col("doc_id").asc()
-            )
-            out = (
-                matched.filter(~F.col("is_stats"))
-                .join(F.broadcast(idf_df), "query_id", "left")
-                # WAND rows arrive pre-scored; sentinel-path rows score here
-                .withColumn("score", F.coalesce(F.col("score"), F.expr(score_expr)))
-                .select("query_id", "doc_id", "score")
-                .withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k)
-            )
-            rows = out.collect()
-        finally:
-            matched.unpersist()
-        return spark.createDataFrame(
-            rows, schema="query_id int, doc_id long, score double, rank int"
-        ) if rows else spark.createDataFrame(
-            [], schema="query_id int, doc_id long, score double, rank int"
-        )
+        top = pd.DataFrame(
+            self.match_score(self._parse(queries), k),
+            columns=["query_id", "doc_id", "score"],
+        ).astype({"query_id": "int32", "doc_id": "int64", "score": "float64"})
+        top["rank"] = (top.groupby("query_id").cumcount() + 1).astype("int32")
+        return _local_frame(self.spark, top, BATCH_SCHEMA)
 
     # ---- snippets ------------------------------------------------------
 
-    def _snippet_pair(
-        self, texts: list[str], tree, phrases, expansions
-    ) -> tuple[list[str], list[str]]:
+    def _snippet_pair(self, texts: list[str], tree, phrases) -> tuple[list[str], list[str]]:
         """FTS5 snippet(…,16) titles + snippet(…,60) bodies for ≤k texts,
         computed driver-side (Q7 runs only over emitted rows). Per doc, only
         VISIBLE phrases are highlighted — FTS5's snippet() skips phrases
@@ -552,7 +386,7 @@ class SearchEngine:
         d)."""
         from .query.snippet import make_snippet, phrase_slot_table, snippet_plan
 
-        slots_list, anchored = phrase_slot_table(phrases, expansions)
+        slots_list, anchored = phrase_slot_table(phrases, {})
         titles: list[str] = []
         bodies: list[str] = []
         for text in texts:
@@ -563,16 +397,16 @@ class SearchEngine:
         return titles, bodies
 
 
-def tree_has_no_near(node: Node) -> bool:
-    if node.op == "NEAR":
-        return False
-    return all(tree_has_no_near(c) for c in node.children)
+def _plain_terms(tree: Node, phrases: list[Phrase]) -> bool:
+    """Only plain indexed single terms and no NEAR: every df is known
+    before the scan."""
+    return tree_has_no_near(tree) and all(
+        len(p.terms) == 1 and not p.prefix and not p.anchored and p.col != "unindexed"
+        for p in phrases
+    )
 
 
-def tree_is_pure_and(node: Node) -> bool:
-    """True iff the tree is a conjunction of plain phrases (no OR/NOT/NEAR)."""
-    if node.op == "PHRASE":
-        return True
-    if node.op == "AND":
-        return all(tree_is_pure_and(c) for c in node.children)
-    return False
+def _local_frame(spark: SparkSession, pdf: pd.DataFrame, schema: str) -> DataFrame:
+    """A driver-built result as a LocalRelation, so collecting it runs no
+    Spark job (an EMPTY pandas frame would become an RDD scan that does)."""
+    return spark.createDataFrame(pa.Table.from_pandas(pdf, preserve_index=False), schema=schema)

@@ -69,23 +69,59 @@ def test_point_lookup_prunes_shard_partition(engine):
 
 
 def test_fts_query_plan_has_no_exchange_before_scoring(engine):
-    """The fast path is scan → (shard-grouped) score → top-k: the only wide
-    node allowed between the postings scan and the python scorer is the
-    groupBy("shard") exchange, whose payload is <= n_query_terms rows per
-    shard — never a second full-width shuffle."""
-    scored = engine._run_fast(
-        engine._postings.filter(F.col("term").isin(["renal", "failure"])),
-        *_tiny_tree(engine, "renal failure"),
-        200,
-        None,
-    )
-    plan = _executed_plan(scored)
-    assert plan.count("Exchange") <= 1, plan
+    """The executor is scan → (shard-grouped) match+score → reduce: the only
+    wide node allowed between the postings scan and the python shard
+    operator is the groupBy("shard") exchange, whose payload is <=
+    n_query_terms rows per shard — never a second full-width shuffle. One
+    operator serves a plain-term query and a phrase query alike."""
+    plan = engine._plan(engine._parse(["renal failure", '"renal failure"']))
+    matched = engine._shard_op(plan, 200)
+    plan_text = _executed_plan(matched)
+    assert plan_text.count("Exchange") <= 1, plan_text
 
 
-def _tiny_tree(engine, q):
-    tree, phrases = engine._plan(q)
-    return tree, phrases
+def test_search_job_counts(spark, index_dir):
+    """Spark jobs per request, counted by job group on a fresh engine (cold
+    df cache). A plain-term request runs <= 4 jobs (dictionary, shard
+    operator + top-k, doc lookup); a phrase request <= 5 (the df sentinels
+    and the top-k read one persisted match pass); an 8-query search_batch
+    <= 7. Collecting a returned result, empty or not, runs none: results are
+    driver-local relations."""
+    import itertools
+    import time
+
+    from pdfsearch_spark.search import SearchEngine
+
+    eng = SearchEngine(spark, index_dir)
+    sc = spark.sparkContext
+    groups = itertools.count()
+
+    def grouped(fn):
+        group = f"job-count-{next(groups)}"
+        sc.setJobGroup(group, group)
+        try:
+            return group, fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    batch = [
+        "renal", "renal failure", "renal OR kidney", "renal NOT failure",
+        '"renal failure"', "ren*", "NEAR(renal failure, 5)", "^renal",
+    ]
+    plain, plain_df = grouped(lambda: eng.search("renal failure", k=200))
+    phrase, _ = grouped(lambda: eng.search('"renal failure"', k=200))
+    batched, _ = grouped(lambda: eng.search_batch(batch, k=10))
+    _, empty_df = grouped(lambda: eng.search("zzqxjv", k=200))
+    collect_hit, hit_rows = grouped(plain_df.collect)
+    collect_empty, empty_rows = grouped(empty_df.collect)
+    assert hit_rows and not empty_rows
+    time.sleep(1.0)  # the status tracker reads the listener bus
+    n = {g: len(sc.statusTracker().getJobIdsForGroup(g))
+         for g in (plain, phrase, batched, collect_hit, collect_empty)}
+    assert n[plain] <= 4, n
+    assert n[phrase] <= 5, n
+    assert n[batched] <= 7, n
+    assert n[collect_hit] == 0 and n[collect_empty] == 0, n
 
 
 # ---- entry queries ------------------------------------------------------

@@ -153,7 +153,8 @@ def test_book_filter(engine, oracle, corpus_pdf):
 
 def test_search_batch_matches_per_query(engine, oracle):
     """search_batch (one shard-scan job for ALL queries) must return the
-    same per-query top-k as the sequential engine / the FTS5 oracle."""
+    same per-query top-k as the FTS5 oracle, and exactly the row set
+    ``search(q, k=10)`` returns: both run the same executor."""
     qs = [x["query"] for x in QUERIES if not x["expect_error"]]
     out = engine.search_batch(qs, k=10)
     by_q: dict[int, list] = {}
@@ -165,6 +166,7 @@ def test_search_batch_matches_per_query(engine, oracle):
             continue
         o = _oracle_pairs(oracle, q, 10)
         got = sorted((d, s) for _rk, d, s in by_q.get(qid, []))
+        assert got == _engine_pairs(engine, q, 10), f"q={q!r}: batch != search"
         # same tie-tolerant contract as test_rank_identical_k10
         o_scores = sorted(s for _, s in o)
         g_scores = sorted(s for _, s in got)
