@@ -195,35 +195,6 @@ def encode_postings(
     }
 
 
-def encode_shard_frame(
-    terms: np.ndarray,
-    doc_ids: np.ndarray,
-    tfs: np.ndarray,
-    dls: np.ndarray,
-    positions: list,
-    avgdl: float,
-) -> dict:
-    """Encode ALL posting lists of one shard in one vectorized pass.
-
-    Inputs must be sorted by (term, doc_id). Format per term is identical to
-    encode_postings (golden-tested round-trip); the difference is purely
-    mechanical: one _varint_stream call and ~50 numpy ops for the whole
-    shard instead of per-term pandas slicing — ~10x fewer Python dispatches
-    in the build's hottest stage. Returns dict of column lists.
-    """
-    n = len(doc_ids)
-    if n == 0:
-        return _EMPTY_FRAME()
-    # term boundaries (terms sorted): ts = starts per term, len T+1
-    uniq, ts0 = np.unique(terms, return_index=True)
-    order_t = np.argsort(ts0)
-    uniq, ts0 = uniq[order_t], ts0[order_t]
-    ts = np.append(ts0, n)
-    return encode_shard_frame_pre(
-        list(uniq), ts, doc_ids, tfs, dls, positions, avgdl
-    )
-
-
 def _EMPTY_FRAME() -> dict:
     return {k: [] for k in (
         "term", "df", "cf", "dl_blob", "doc_blob", "tf_blob", "pos_blob",
@@ -238,16 +209,23 @@ def encode_shard_frame_pre(
     doc_ids: np.ndarray,
     tfs: np.ndarray,
     dls: np.ndarray,
-    positions: list,
+    positions: tuple[np.ndarray, np.ndarray],
     avgdl: float,
 ) -> dict:
-    """encode_shard_frame with term boundaries precomputed by the caller:
+    """Encode ALL posting lists of one shard in one vectorized pass.
+
+    Postings are grouped by term, doc_id ascending within each term.
     ``uniq`` = term strings in stream order, ``ts`` = int64 posting-start
-    offsets per term (len T+1, ts[0]=0, ts[T]=n). The build's hot path
-    (index_build.encode_docs_partitions) tracks terms as integer ids, so it
-    derives boundaries from a bincount over the sorted id stream — no
-    object-dtype np.unique / lexsort over string arrays (pointer-chasing
-    that dominates encode CPU and memory traffic)."""
+    offsets per term (len T+1, ts[0]=0, ts[T]=n); ``positions`` = (flat
+    positions, per-posting counts). Format per term is identical to
+    encode_postings (tests/test_codec.py::test_shard_frame_matches_encode_postings);
+    the difference is purely mechanical: one _varint_stream call and ~50
+    numpy ops for the whole shard instead of per-term slicing. The build's
+    hot path (index_build.encode_docs_partitions) tracks terms as integer
+    ids, so it derives boundaries from a bincount over the sorted id stream
+    — no object-dtype np.unique / lexsort over string arrays. Returns dict
+    of column lists.
+    """
     n = len(doc_ids)
     if n == 0:
         return _EMPTY_FRAME()
@@ -274,26 +252,15 @@ def encode_shard_frame_pre(
         gaps[1:] = u[1:] - u[:-1]
     gaps[bs] = (u[bs] << np.uint64(1)) ^ (doc_ids[bs] >> np.int64(63)).view(np.uint64)
 
-    # position stream: per posting [count, p0, gaps...]. ``positions`` is
-    # either a list of per-posting position sequences, or — fast path from
-    # the packed shuffle payload — an already-flattened (flat, plens) tuple.
-    if isinstance(positions, tuple):
-        flat, plens = positions
-        plens = np.ascontiguousarray(plens, dtype=np.int64)
-        total_p = int(plens.sum())
-        flat = (
-            np.ascontiguousarray(flat, dtype=np.int64)
-            if total_p
-            else np.zeros(0, dtype=np.int64)
-        )
-    else:
-        plens = np.fromiter((len(p) for p in positions), dtype=np.int64, count=n)
-        total_p = int(plens.sum())
-        flat = (
-            np.concatenate(positions).astype(np.int64)
-            if total_p
-            else np.zeros(0, dtype=np.int64)
-        )
+    # position stream: per posting [count, p0, gaps...]
+    flat, plens = positions
+    plens = np.ascontiguousarray(plens, dtype=np.int64)
+    total_p = int(plens.sum())
+    flat = (
+        np.ascontiguousarray(flat, dtype=np.int64)
+        if total_p
+        else np.zeros(0, dtype=np.int64)
+    )
     fstarts = np.zeros(n, dtype=np.int64)
     np.cumsum(plens[:-1], out=fstarts[1:])
     d = np.empty(total_p, dtype=np.int64)

@@ -23,10 +23,12 @@ refresh) a fixed-tail Spark job that Amdahl-floored scaling efficiency
   write job per build/refresh and one rewrite per compaction.
 - ``term_stats`` (term → global df/cf, for idf) == sum over the postings
   table's own (term, df, cf) metadata columns. Query-side df lookup is a
-  pruned postings scan (term is the sort key within each file, so row-group
-  min/max stats prune In/StartsWith) summed driver-side over ≤ shards×terms
-  rows — no job writes the vocabulary, and a segment refresh no longer pays
-  a full-vocabulary groupBy: refresh cost is O(batch), not O(vocab).
+  postings scan with the term filter pushed down, summed driver-side over
+  ≤ shards×terms rows — no job writes the vocabulary, and a segment refresh
+  no longer pays a full-vocabulary groupBy: refresh cost is O(batch), not
+  O(vocab). Postings files are NOT sorted by term: the one encoder
+  (encode_docs_partitions) emits each shard's terms in first-appearance
+  order, so row-group min/max stats on ``term`` prune only by range.
 
 Scale design (the part that must survive 1000 executors × 100 TB):
 
@@ -99,17 +101,6 @@ def table_dir(out_dir: str, tbl: str, epoch: int = 0) -> str:
     the new complete epoch, never a half-swapped directory. Old epochs are
     GC'd only after the commit."""
     return os.path.join(out_dir, tbl if epoch == 0 else f"{tbl}.v{epoch}")
-
-TERMROW_SCHEMA = StructType(
-    [
-        StructField("shard", IntegerType()),
-        StructField("doc_id", LongType()),
-        StructField("term", StringType()),
-        StructField("tf", IntegerType()),
-        StructField("dl", IntegerType()),
-        StructField("positions", ArrayType(IntegerType())),
-    ]
-)
 
 DOCROW_SCHEMA = StructType(
     [
@@ -376,15 +367,15 @@ def encode_docs_partitions(avgdl: float, metrics_acc=None, segment: int = 0):
     single text-moving exchange), the per-doc term payload never crosses a
     shuffle OR an Arrow boundary: tokens go straight from the analyzer's
     output into the codec's vectorized encoder inside the same worker.
-    This replaces the former term_rows → groupBy(shard).applyInPandas
-    pipeline, which serialized every (term, tf, positions) through one more
-    exchange and two more Arrow crossings — measurably the build's one
-    non-scaling phase (BENCH/BASELINE.md).
+
+    Terms come out in first-appearance order over the shard's docs in
+    doc_id order (the pd.factorize ids), not sorted; the output is a pure
+    function of the shard's doc set and ``avgdl``.
 
     A partition may hold several shards (hash collisions); they are grouped
-    locally. A shard must fit in one task's memory — the same bound
-    applyInPandas imposed — so ``n_shards`` stays the knob that caps
-    per-task state as the corpus grows.
+    locally. A shard must fit in one task's memory, so ``n_shards`` stays
+    the knob that caps per-task state as the corpus grows. ``metrics_acc``:
+    see _encode_postings.
     """
 
     def fn(it):
@@ -479,54 +470,78 @@ def encode_docs_partitions(avgdl: float, metrics_acc=None, segment: int = 0):
     return fn
 
 
-def encode_shard_postings(avgdl: float, metrics_acc=None, segment: int = 0):
-    """applyInPandas body: one shard's flat (doc,term) TERMROW_SCHEMA rows →
-    encoded posting rows. This is the COMPACTION re-encode path
-    (decoded_term_rows); fresh builds and refreshes use
-    encode_docs_partitions, which never materializes per-term rows.
+def _encode_postings(
+    spark: SparkSession, store: DataFrame, postings_dir: str, avgdl: float, segment: int = 0
+) -> dict:
+    """The index's one postings writer — build, refresh and compaction all
+    encode through it. A pruned (shard, doc_id, text) read of a
+    shard-clustered doc store, pinned to whole-file tasks so partition ==
+    shard exactly (one posting row per (segment, shard, term)); tokenize →
+    aggregate → encode runs in a single mapInPandas, no shuffle, and the
+    per-term payload never crosses an Arrow boundary.
 
-    ``metrics_acc`` (optional): a dict-summing accumulator fed
-    ``{shard: [encode_sec, n_postings, n_terms, postings_bytes,
-    positions_bytes]}`` per group — per-partition build metrics measured at
-    the source instead of re-scanning blob columns afterwards (a blob-length
-    scan would read every posting byte back at 100 TB scale). Task retries
-    double-count; metrics are throughput evidence, not invariants.
-    """
+    Returns the per-shard metrics ``{shard: [encode_sec, n_postings, n_terms,
+    postings_bytes, positions_bytes]}``, measured inside the encode via an
+    accumulator rather than by re-scanning blob columns afterwards (a
+    blob-length scan would read every posting byte back at 100 TB scale).
+    Task retries double-count; metrics are throughput evidence, not
+    invariants."""
+    acc = spark.sparkContext.accumulator({}, _ShardMetricsParam())
+    with _whole_file_scans(spark):
+        store.select("shard", "doc_id", "text").mapInPandas(
+            encode_docs_partitions(avgdl, acc, segment=segment), schema=POSTING_SCHEMA
+        ).write.partitionBy("segment", "shard").mode("overwrite").parquet(postings_dir)
+    return dict(acc.value)
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        from .codec import encode_shard_frame
 
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=[f.name for f in POSTING_SCHEMA.fields])
-        t0 = time.perf_counter()
-        shard = int(pdf["shard"].iloc[0])
-        pdf = pdf.sort_values(["term", "doc_id"], kind="stable")
-        cols = encode_shard_frame(
-            pdf["term"].to_numpy(),
-            pdf["doc_id"].to_numpy(np.int64),
-            pdf["tf"].to_numpy(np.int64),
-            pdf["dl"].to_numpy(np.int64),
-            pdf["positions"].tolist(),
-            avgdl,
+def _shard_lineage(store: DataFrame) -> dict:
+    """Per-shard lineage of a doc store in ONE column-pruned agg: doc count,
+    input fingerprint (bit_xor of doc ids — order-independent, cheap, no
+    blob reads), token count and ingest watermark."""
+    return {
+        r["shard"]: r
+        for r in store.groupBy("shard")
+        .agg(
+            F.count("*").alias("n_docs"),
+            F.expr("bit_xor(doc_id)").alias("docs_fingerprint"),
+            F.sum("dl").alias("n_tokens"),
+            F.max("warc_ts").alias("watermark"),
         )
-        n_postings = len(pdf)
-        out = pd.DataFrame(cols)
-        out.insert(0, "shard", shard)
-        out.insert(0, "segment", np.int32(segment))
-        out["enc_avgdl"] = float(avgdl)
-        if metrics_acc is not None:
-            pbytes = int(
-                sum(len(b) for b in cols["doc_blob"])
-                + sum(len(b) for b in cols["tf_blob"])
-                + sum(len(b) for b in cols["dl_blob"])
-            )
-            qbytes = int(sum(len(b) for b in cols["pos_blob"]))
-            metrics_acc.add(
-                {shard: [time.perf_counter() - t0, n_postings, len(out), pbytes, qbytes]}
-            )
-        return out[[f.name for f in POSTING_SCHEMA.fields]]
+        .collect()
+    }
 
-    return fn
+
+def _write_manifest(
+    spark: SparkSession, out_dir: str, shards: list[int], lineage: dict, sm: dict, mode: str
+) -> None:
+    """Per-shard lineage + metrics manifest (``_build_state``, the north_rule
+    checkpoint clause) for the shards a build or refresh wrote."""
+    zero = [0.0, 0, 0, 0, 0]
+    rows = []
+    for s in shards:
+        lin = lineage.get(s)
+        n_docs = int(lin["n_docs"]) if lin else 0
+        sec, n_post, n_terms, pbytes, qbytes = sm.get(s, zero)
+        rows.append(
+            {
+                "shard": s,
+                "status": "complete",
+                "built_at": pd.Timestamp.utcnow().tz_localize(None),
+                "n_docs": n_docs,
+                "docs_fingerprint": int(lin["docs_fingerprint"]) if lin else 0,
+                "n_tokens": int(lin["n_tokens"]) if lin else 0,
+                "n_terms": int(n_terms),
+                "n_postings": int(n_post),
+                "postings_bytes": int(pbytes),
+                "positions_bytes": int(qbytes),
+                "encode_sec": float(sec),
+                "docs_per_sec": n_docs / sec if sec > 0 else 0.0,
+                "postings_per_sec": n_post / sec if sec > 0 else 0.0,
+            }
+        )
+    spark.createDataFrame(pd.DataFrame(rows)).write.mode(mode).parquet(
+        os.path.join(out_dir, "_build_state")
+    )
 
 
 def build_index(
@@ -540,8 +555,8 @@ def build_index(
 
     ``only_shards`` is the resume hook: drop completed shards before the
     exchange (never re-shuffled or re-extracted) and rebuild only the given
-    shards' doc_text/documents/postings partitions; global stats re-derive
-    from the now-complete narrow documents table.
+    shards' doc_text/postings partitions; global stats re-derive from a
+    column-pruned read of the now-complete doc store.
     """
     t0 = time.time()
     phases: dict[str, float] = {}
@@ -556,8 +571,9 @@ def build_index(
         # Fresh build: clear prior table dirs. Dynamic partition overwrite
         # (needed for resume/refresh) only replaces partitions present in the
         # output, so a rebuild over an old dir would otherwise leave orphan
-        # shard/segment partitions behind.
-        for sub in ("postings", "doc_text"):
+        # shard/segment partitions behind. ``documents`` and ``term_stats``
+        # are the pre-format-6 tables (and their epochs): swept, not orphaned.
+        for sub in ("postings", "doc_text", "documents", "term_stats"):
             _hdfs_rm(spark, os.path.join(out_dir, sub))
             _gc_epoch_dirs(spark, out_dir, sub, keep_epochs=0)
     # ONE full-payload shuffle for the whole build, and it moves RAW pages:
@@ -636,19 +652,7 @@ def build_index(
     def _lineage_agg() -> None:
         tw = time.time()
         try:
-            lineage.update(
-                {
-                    r["shard"]: r
-                    for r in store.groupBy("shard")
-                    .agg(
-                        F.count("*").alias("n_docs"),
-                        F.expr("bit_xor(doc_id)").alias("docs_fingerprint"),
-                        F.sum("dl").alias("n_tokens"),
-                        F.max("warc_ts").alias("watermark"),
-                    )
-                    .collect()
-                }
-            )
+            lineage.update(_shard_lineage(store))
         except BaseException as exc:  # re-raised on join
             lin_state["exc"] = exc
         lin_state["sec"] = round(time.time() - tw, 2)
@@ -674,22 +678,13 @@ def build_index(
     avgdl = total_tokens / n_docs if n_docs else 0.0
     _phase("stats_lineage_agg")
 
-    # Postings, entirely map-side: a pruned (shard, doc_id, text) read of
-    # the shard-clustered store, pinned to whole-file tasks so partition ==
-    # shard exactly (one posting row per (segment, shard, term)); tokenize
-    # → aggregate → encode runs in a single mapInPandas, no second shuffle,
-    # and the per-term payload never crosses an Arrow boundary.
-    shard_metrics_acc = spark.sparkContext.accumulator({}, _ShardMetricsParam())
-    with _whole_file_scans(spark):
-        rows = store.select("shard", "doc_id", "text")
-        if only_shards is not None:
-            rows = rows.filter(F.col("shard").isin(only_shards))
-        postings = rows.mapInPandas(
-            encode_docs_partitions(avgdl, shard_metrics_acc), schema=POSTING_SCHEMA
-        )
-        postings.write.partitionBy("segment", "shard").mode("overwrite").parquet(
-            os.path.join(out_dir, "postings")
-        )
+    # Postings, entirely map-side, from the shard-clustered store.
+    sm = _encode_postings(
+        spark,
+        store if only_shards is None else store.filter(F.col("shard").isin(only_shards)),
+        os.path.join(out_dir, "postings"),
+        avgdl,
+    )
     _phase("postings_encode_write")
 
     if lin_thread is not None:
@@ -706,40 +701,14 @@ def build_index(
     _write_stats(spark, out_dir, n_docs, avgdl, total_tokens, n_shards, 1, watermark)
 
     elapsed = time.time() - t0
-    # Per-shard lineage + metrics manifest (north_rule checkpoint clause):
-    # lineage = per-shard input fingerprint (doc count + bit_xor of doc_ids —
-    # order-independent, cheap, no blob reads), computed in the single
-    # corpus-stats agg above; metrics = encode time / posting count /
-    # compressed bytes measured inside the encode UDF via accumulator.
-    built = only_shards if only_shards is not None else list(range(n_shards))
-    sm = dict(shard_metrics_acc.value)
     n_postings = int(sum(v[1] for v in sm.values()))
-    zero = [0.0, 0, 0, 0, 0]
-    rows_out = []
-    for s in built:
-        lin = lineage.get(s)
-        sec, n_post, n_terms, pbytes, qbytes = sm.get(s, zero)
-        rows_out.append(
-            {
-                "shard": s,
-                "status": "complete",
-                "built_at": pd.Timestamp.utcnow().tz_localize(None),
-                "n_docs": int(lin["n_docs"]) if lin else 0,
-                "docs_fingerprint": int(lin["docs_fingerprint"]) if lin else 0,
-                "n_tokens": int(lin["n_tokens"]) if lin else 0,
-                "n_terms": int(n_terms),
-                "n_postings": int(n_post),
-                "postings_bytes": int(pbytes),
-                "positions_bytes": int(qbytes),
-                "encode_sec": float(sec),
-                "docs_per_sec": (int(lin["n_docs"]) / sec) if lin and sec > 0 else 0.0,
-                "postings_per_sec": (n_post / sec) if sec > 0 else 0.0,
-            }
-        )
-    manifest = pd.DataFrame(rows_out)
-    mode = "overwrite" if only_shards is None else "append"
-    spark.createDataFrame(manifest).write.mode(mode).parquet(
-        os.path.join(out_dir, "_build_state")
+    _write_manifest(
+        spark,
+        out_dir,
+        only_shards if only_shards is not None else list(range(n_shards)),
+        lineage,
+        sm,
+        "overwrite" if only_shards is None else "append",
     )
 
     return {
@@ -961,17 +930,10 @@ def refresh_index(
 
     # 2) postings for the new segment (blocks encoded against the NEW avgdl;
     #    older segments' block bounds are rescaled at query time via
-    #    enc_avgdl), from a pruned whole-file read of the segment's store
-    shard_metrics_acc = spark.sparkContext.accumulator({}, _ShardMetricsParam())
-    with _whole_file_scans(spark):
-        rows = seg_store.select("shard", "doc_id", "text")
-        postings = rows.mapInPandas(
-            encode_docs_partitions(avgdl2, shard_metrics_acc, segment=seg),
-            schema=POSTING_SCHEMA,
-        )
-        postings.write.partitionBy("segment", "shard").mode("overwrite").parquet(
-            table_dir(out_dir, "postings", epoch)
-        )
+    #    enc_avgdl), from the segment's store
+    sm = _encode_postings(
+        spark, seg_store, table_dir(out_dir, "postings", epoch), avgdl2, segment=seg
+    )
 
     # 3) term stats: NOT rewritten. Global df/cf stays derivable from the
     #    postings table (all segments), so a segment append costs O(batch)
@@ -979,44 +941,8 @@ def refresh_index(
     #    (format 6).
 
     # 4) per-shard lineage + metrics for the manifest (pruned store read)
-    lineage = {
-        r["shard"]: r
-        for r in seg_store
-        .groupBy("shard")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.expr("bit_xor(doc_id)").alias("docs_fingerprint"),
-            F.sum("dl").alias("n_tokens"),
-        )
-        .collect()
-    }
-    sm = dict(shard_metrics_acc.value)
-    zero = [0.0, 0, 0, 0, 0]
-    rows_out = []
-    for s in sorted(lineage):
-        lin = lineage[s]
-        sec, n_post, n_terms, pbytes, qbytes = sm.get(s, zero)
-        rows_out.append(
-            {
-                "shard": s,
-                "status": "complete",
-                "built_at": pd.Timestamp.utcnow().tz_localize(None),
-                "n_docs": int(lin["n_docs"]),
-                "docs_fingerprint": int(lin["docs_fingerprint"]),
-                "n_tokens": int(lin["n_tokens"]),
-                "n_terms": int(n_terms),
-                "n_postings": int(n_post),
-                "postings_bytes": int(pbytes),
-                "positions_bytes": int(qbytes),
-                "encode_sec": float(sec),
-                "docs_per_sec": (int(lin["n_docs"]) / sec) if sec > 0 else 0.0,
-                "postings_per_sec": (n_post / sec) if sec > 0 else 0.0,
-            }
-        )
-    if rows_out:
-        spark.createDataFrame(pd.DataFrame(rows_out)).write.mode("append").parquet(
-            os.path.join(out_dir, "_build_state")
-        )
+    lineage = _shard_lineage(seg_store)
+    _write_manifest(spark, out_dir, sorted(lineage), lineage, sm, "append")
 
     # 5) COMMIT: stats last — new watermark + segment count become visible
     #    only once every data partition for the segment is in place.
@@ -1040,42 +966,25 @@ def refresh_index(
     }
 
 
-def decoded_term_rows(postings: DataFrame) -> DataFrame:
-    """Inverse of the encode stage: posting rows → (shard, doc_id, term, tf,
-    dl, positions) rows, streamed via mapInPandas (compaction input)."""
-
-    def batches(it):
-        from .codec import decode_dls, decode_doc_ids, decode_positions, decode_tfs
-
-        for pdf in it:
-            for r in pdf.itertuples():
-                doc_ids = decode_doc_ids(bytes(r.doc_blob), list(r.block_lens))
-                tfs = decode_tfs(bytes(r.tf_blob))
-                dls = decode_dls(bytes(r.dl_blob))
-                pos = decode_positions(bytes(r.pos_blob), len(doc_ids))
-                yield pd.DataFrame(
-                    {
-                        "shard": np.int32(r.shard),
-                        "doc_id": doc_ids,
-                        "term": r.term,
-                        "tf": tfs.astype(np.int32),
-                        "dl": dls.astype(np.int32),
-                        "positions": [p.astype(np.int32) for p in pos],
-                    }
-                )
-
-    return postings.mapInPandas(batches, schema=TERMROW_SCHEMA)
-
-
 def compact_index(spark: SparkSession, out_dir: str) -> dict:
-    """Merge all segments back into one (segment 0), re-encoding blocks
-    against the current avgdl — the Lucene merge / Iceberg rewriteDataFiles
-    analog.
+    """Merge all committed segments back into one (segment 0) — the Lucene
+    merge / Iceberg rewriteDataFiles analog — as a segment REWRITE through
+    the build's own pipeline; no posting is decoded:
+
+    1. the current epoch's doc_text, committed segments only
+       (``segment < n_segments``: a crashed refresh's orphan segment is not
+       in ``stats``, so it is not folded in — its redo refresh re-appends
+       those docs), is shard-clustered into the next epoch as segment 0,
+       one file per shard;
+    2. postings are encoded from that store at the stats avgdl by the one
+       writer build_index and refresh_index use (_encode_postings). Over
+       the same docs, a compacted shard's postings equal a fresh build's
+       row for row, blobs byte for byte.
 
     Crash safety (versioned-root commit, the plain-parquet stand-in for an
-    Iceberg RewriteFiles snapshot): the merged tables are written into the
-    NEXT epoch's dirs (``<tbl>.v<N+1>``, see table_dir) while every reader
-    keeps resolving the CURRENT epoch through ``stats``; the single small
+    Iceberg RewriteFiles snapshot): both tables are written into the NEXT
+    epoch's dirs (``<tbl>.v<N+1>``, see table_dir) while every reader keeps
+    resolving the CURRENT epoch through ``stats``; the single small
     ``stats`` rewrite — carrying the new epoch — is the commit point,
     after which old epochs are GC'd. A crash at any moment before the
     commit leaves the old epoch complete and visible (a rerun overwrites
@@ -1087,39 +996,31 @@ def compact_index(spark: SparkSession, out_dir: str) -> dict:
     """
     t0 = time.time()
     st = spark.read.parquet(os.path.join(out_dir, "stats")).collect()[0]
-    if int(st["n_segments"]) <= 1:
+    segments_before = int(st["n_segments"])
+    if segments_before <= 1:
         return {"compacted": False, "elapsed_sec": time.time() - t0}
     n_shards, avgdl = int(st["n_shards"]), float(st["avgdl"])
     epoch = int(st["epoch"])
     new_epoch = epoch + 1
-    segments_before = int(st["n_segments"])
     files_before = _count_parquet_files(
         spark, table_dir(out_dir, "postings", epoch)
     )
 
-    # decode → merge → re-encode per shard, into the next epoch's dirs
-    rows = decoded_term_rows(
-        spark.read.parquet(table_dir(out_dir, "postings", epoch))
-    )
-    merged = rows.groupBy("shard").applyInPandas(
-        encode_shard_postings(avgdl, segment=0), schema=POSTING_SCHEMA
-    )
-    coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
-    prev = spark.conf.get(coalesce_key, "true")
-    spark.conf.set(coalesce_key, "false")
-    try:
-        merged.write.partitionBy("segment", "shard").mode("overwrite").parquet(
-            table_dir(out_dir, "postings", new_epoch)
-        )
-    finally:
-        spark.conf.set(coalesce_key, prev)
-    df = (
-        spark.read.parquet(table_dir(out_dir, "doc_text", epoch))
+    store_dir = table_dir(out_dir, "doc_text", new_epoch)
+    committed = (
+        spark.read.schema(DOC_STORE_SCHEMA)
+        .parquet(table_dir(out_dir, "doc_text", epoch))
+        .filter(F.col("segment") < segments_before)
         .withColumn("segment", F.lit(0))
-        .repartition(n_shards, F.col("shard"))
     )
-    df.write.partitionBy("segment", "shard").mode("overwrite").parquet(
-        table_dir(out_dir, "doc_text", new_epoch)
+    cluster_by_shard(committed, n_shards).write.partitionBy(
+        "segment", "shard"
+    ).mode("overwrite").parquet(store_dir)
+    _encode_postings(
+        spark,
+        spark.read.schema(DOC_STORE_SCHEMA).parquet(store_dir),
+        table_dir(out_dir, "postings", new_epoch),
+        avgdl,
     )
 
     # COMMIT: flip the epoch in stats. Until this write lands, readers

@@ -13,7 +13,7 @@
      known after matching, so shards emit the matched rows (doc_id, dl,
      visible-tf vector) plus one df-sentinel row.
 2. One shard operator. One shard-pruned, term-pruned parquet scan of
-   ``postings`` (every query's terms and prefixes pushed down on the sorted
+   ``postings`` (every query's terms and prefixes pushed down on the
    ``term`` column) feeds one ``groupBy(shard).applyInPandas``, which also
    applies the optional book filter. Past that exchange the work is
    shuffle-free: all of a doc's postings are in its shard.
@@ -92,10 +92,10 @@ class SearchEngine:
         )
         # The term dictionary is every query's first hop (df lookup). It is
         # the postings table's own (term, df) metadata columns — format 6
-        # materializes no separate term_stats table — read pruned: term is
-        # the sort key within each postings file, so parquet row-group
-        # min/max stats prune In/StartsWith exactly like the scoring scan's
-        # predicate. At web scale this is the RIGHT shape too: each
+        # materializes no separate term_stats table — read with the same
+        # pushed-down In/StartsWith filter as the scoring scan (postings
+        # files are in first-appearance term order, not sorted, so
+        # row-group min/max stats prune only by range). At web scale this is the RIGHT shape too: each
         # executor's dictionary rows live beside its shards (no global
         # vocabulary table to build, ship, or refresh), and the driver sums
         # the ≤ shards×terms returned rows.
@@ -162,10 +162,10 @@ class SearchEngine:
     def _scan_predicate(phrases: list[Phrase]):
         """(exact terms, prefixes) → pushdown-able postings-scan filter.
 
-        Prefix phrases push ``startswith(pref)`` into the scan itself —
-        parquet row-group min/max stats on the sorted ``term`` column prune
-        for a StringStartsWith exactly like they do for In, and no term list
-        ever lands on the driver."""
+        Prefix phrases push ``startswith(pref)`` into the scan itself, like
+        In for exact terms, so no term list ever lands on the driver. The
+        ``term`` column is not sorted within a file (first-appearance
+        order), so row-group min/max stats prune only by range."""
         exact: set[str] = set()
         prefixes: set[str] = set()
         for p in phrases:

@@ -119,3 +119,38 @@ def test_block_positions_match_full_decode():
     for x, i_ in zip(got, idxs):
         assert (x == full[i_]).all()
     assert len(lp._cache) <= 2  # blocks 2-4 never decoded
+
+
+def test_shard_frame_matches_encode_postings():
+    """Golden test of the build's one encoder: encode_shard_frame_pre over a
+    whole shard (terms in arbitrary stream order, some lists longer than
+    BLOCK) equals the per-term reference encode_postings in every field.
+    max_impacts is compared as stored (float32 column)."""
+    from pdfsearch_spark.codec import encode_shard_frame_pre
+
+    rng = np.random.Generator(np.random.Philox(key=[21, 5]))
+    avgdl = 87.5
+    for trial in range(4):
+        sizes = [1, BLOCK, BLOCK + 1, 3 * BLOCK + 5] + rng.integers(
+            1, 2 * BLOCK, size=int(rng.integers(2, 6))
+        ).tolist()
+        lists = [_random_posting(rng, int(n)) for n in rng.permutation(sizes)]
+        terms = [f"t{trial}_{i}" for i in rng.permutation(len(lists))]
+        ts = np.concatenate([[0], np.cumsum([len(d) for d, _, _, _ in lists])])
+        tfs = np.concatenate([t for _, t, _, _ in lists])
+        frame = encode_shard_frame_pre(
+            terms,
+            ts,
+            np.concatenate([d for d, _, _, _ in lists]),
+            tfs,
+            np.concatenate([l for _, _, l, _ in lists]),
+            (np.concatenate([p for _, _, _, ps in lists for p in ps]), tfs),
+            avgdl,
+        )
+        assert frame["term"] == terms
+        for t, (doc_ids, tf, dls, positions) in enumerate(lists):
+            ref = encode_postings(doc_ids, tf, dls, positions, avgdl)
+            assert set(frame) == set(ref) | {"term"}
+            ref["max_impacts"] = np.float32(ref["max_impacts"]).tolist()
+            for field, want in ref.items():
+                assert frame[field][t] == want, (trial, terms[t], field)

@@ -249,6 +249,61 @@ def test_kill_during_compact_never_half_swaps(spark, oracle, refreshed):
     _sh.rmtree(side, ignore_errors=True)
 
 
+def _shape_results(spark, index_dir):
+    eng = SearchEngine(spark, index_dir)
+    out = {}
+    for q in SHAPES:
+        rows = eng.search(q, k=50, with_snippets=False).collect()
+        out[q] = sorted((r["doc_id"], round(r["score"], 9)) for r in rows)
+    return out
+
+
+def test_compaction_skips_uncommitted_segment(spark, oracle, refreshed):
+    """A refresh that crashed before its stats commit leaves an orphan
+    segment (``segment == n_segments``) on disk. Compaction must not fold
+    it into segment 0: stats leave its docs out, so n_docs would stay
+    wrong for good — the redo refresh's anti-join would then skip them."""
+    from pdfsearch_spark import index_build
+    from pdfsearch_spark.index_build import table_dir
+
+    side = REFRESH_INDEX_DIR + "_orphan"
+    shutil.rmtree(side, ignore_errors=True)
+    shutil.copytree(REFRESH_INDEX_DIR, side)
+    before = _shape_results(spark, side)
+    n_before = int(spark.read.parquet(side + "/stats").collect()[0]["n_docs"])
+
+    extra = (
+        corpus.web_pages_df(spark, N_DOCS, partitions=8)
+        .limit(7)
+        .withColumn("url", F.concat(F.lit("http://orphan.example/"), F.col("url")))
+        .withColumn("warc_ts", F.expr("warc_ts + INTERVAL 900 DAYS"))
+    )
+    real_write_stats = index_build._write_stats
+
+    def _boom(*a, **k):
+        raise RuntimeError("simulated crash before stats commit")
+
+    index_build._write_stats = _boom
+    try:
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            refresh_index(spark, extra, side)
+    finally:
+        index_build._write_stats = real_write_stats
+    assert os.path.exists(os.path.join(side, "doc_text", "segment=2"))
+
+    res = compact_index(spark, side)
+    assert res["compacted"] is True
+    assert _shape_results(spark, side) == before
+    st = spark.read.parquet(side + "/stats").collect()[0]
+    assert int(st["n_docs"]) == n_before
+    assert spark.read.parquet(table_dir(side, "doc_text", res["epoch"])).count() == n_before
+
+    redo = refresh_index(spark, extra, side)
+    assert redo["appended_docs"] == 7
+    assert int(spark.read.parquet(side + "/stats").collect()[0]["n_docs"]) == n_before + 7
+    shutil.rmtree(side, ignore_errors=True)
+
+
 def test_compaction_preserves_results(spark, oracle, refreshed):
     from pdfsearch_spark.index_build import table_dir
 
@@ -269,3 +324,29 @@ def test_compaction_preserves_results(spark, oracle, refreshed):
     )
     assert [r["segment"] for r in segs] == [0]
     _assert_oracle_identical(spark, oracle, SHAPES)
+
+
+def test_compacted_postings_equal_fresh_build(spark, refreshed, index_dir):
+    """Compaction encodes through the build's own writer: the compacted
+    half-built-then-refreshed index's postings equal a full build's over
+    the same docs (same N_DOCS / N_SHARDS, same avgdl) row for row, keyed
+    by (shard, term), every column, blobs byte for byte."""
+    from pdfsearch_spark.index_build import table_dir
+
+    st = _stats(spark)
+    if st["n_segments"] > 1:  # run alone: compact here
+        compact_index(spark, REFRESH_INDEX_DIR)
+        st = _stats(spark)
+
+    def by_key(path):
+        rows = [r.asDict() for r in spark.read.parquet(path).collect()]
+        out = {(r["shard"], r["term"]): r for r in rows}
+        assert len(out) == len(rows), "more than one row per (shard, term)"
+        return out
+
+    got = by_key(table_dir(REFRESH_INDEX_DIR, "postings", int(st["epoch"])))
+    want = by_key(table_dir(index_dir, "postings", 0))
+    assert got.keys() == want.keys()
+    for key, row in want.items():
+        diff = [c for c in row if got[key][c] != row[c]]
+        assert not diff, f"{key}: columns differ: {diff}"

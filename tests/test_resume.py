@@ -77,3 +77,18 @@ def test_resumed_index_searches_identically(spark, tmp_path, oracle):
     want = sorted((r.doc_id, r.score) for r in o.search("renal failure", k=200))
     assert [d_ for d_, _ in got] == [d_ for d_, _ in want]
     assert all(abs(a - b) < 1e-9 for (_, a), (_, b) in zip(got, want))
+
+
+def test_fresh_build_sweeps_legacy_layout(spark, tmp_path):
+    """A fresh build over a pre-format-6 index dir removes the tables that
+    format no longer writes (``documents``, ``term_stats``) and their
+    epoch dirs, instead of leaving them orphaned beside the new index."""
+    d = tmp_path / "legacy"
+    legacy = ["documents", "term_stats", "documents.v1", "term_stats.v2"]
+    for sub in legacy:
+        (d / sub / "segment=0").mkdir(parents=True)
+        (d / sub / "segment=0" / "part-0.parquet").write_bytes(b"stale")
+    build_index(spark, corpus.web_pages_df(spark, N, partitions=4), str(d), n_shards=SHARDS)
+    for sub in legacy:
+        assert not (d / sub).exists(), sub
+    assert (d / "postings").is_dir() and (d / "doc_text").is_dir()
