@@ -9,28 +9,39 @@ The reference's entire linguistic pipeline is the FTS5 DDL
    ``remove_diacritics 2`` strips diacritics including from pre-composed
    characters (SURVEY.md §2.3 T1/T2, probe-verified).
 2. porter: classic Porter stemming applied to the unicode61 output
-   (SURVEY.md §2.3 T3).
+   (SURVEY.md §2.3 T3). No stopwords are removed: the reference removes
+   none, and rank-identity with the FTS5 oracle requires the same.
 
 unicode61's classification/fold tables are pinned to Unicode 6.1 inside
 SQLite, so we load exact per-codepoint tables generated by probing the FTS5
 oracle itself (scripts/gen_unicode61_tables.py) rather than deriving them
 from Python's (newer) unicodedata.
 
-Tokenization happens inside Arrow-batched pandas UDFs only — the per-token
-work is dict-cached (Zipfian vocabularies hit the memo almost always), and
-``str.translate`` with a lazily-populated mapping does the fold+separate pass
-at C speed.
+This module is the package's only unicode61+Porter implementation. The index
+build tokenizes inside its pandas UDFs, the query parser on the driver, and
+snippets on the driver over the ≤ k emitted rows. Two forms:
+
+- ``tokenize``: one ``str.translate`` with a lazily-populated mapping does
+  the fold+separate pass at C speed, then ``split``;
+- ``tokenize_spans``: ``(term, start, end)`` per token, for snippets, which
+  copy the original characters. A length-preserving ``str.translate`` from
+  the same tables marks separators, one regex pass takes the maximal
+  non-separator runs, and each run is folded like ``tokenize`` folds it.
+
+Both stem through one memo (Zipfian vocabularies hit it almost always).
 """
 
 from __future__ import annotations
 
 import json
+import re
 from functools import lru_cache
 
 import numpy as np
 import pandas as pd
 
 from .porter import stem as porter_stem
+
 
 def _load_tables_npz():
     """Open the probed unicode61 tables. importlib.resources (not __file__)
@@ -42,52 +53,59 @@ def _load_tables_npz():
     return np.load(io.BytesIO(data))
 
 
-class _XlatMap(dict):
-    """Lazy codepoint→replacement map for str.translate.
+class _LazyMap(dict):
+    """Lazy codepoint→replacement map for str.translate: a miss computes
+    ``fn(cp)`` once and caches it, so memory stays proportional to the
+    alphabet actually seen, not to all of Unicode."""
 
-    separator → ' ', token char → its fold ('' if the char folds away,
-    identity string otherwise). Misses consult the probed kinds/folds tables
-    once and are cached, so memory stays proportional to the alphabet actually
-    seen, not to all of Unicode.
-    """
-
-    def __init__(self, kinds: np.ndarray, folds: dict[int, str]):
+    def __init__(self, fn):
         super().__init__()
-        self._kinds = kinds
-        self._folds = folds
+        self._fn = fn
 
     def __missing__(self, cp: int) -> str:
-        if cp < len(self._kinds) and self._kinds[cp]:
-            v = self._folds.get(cp)
-            if v is None:
-                v = chr(cp)
-        else:
-            v = " "
-        self[cp] = v
+        v = self[cp] = self._fn(cp)
         return v
 
 
 @lru_cache(maxsize=1)
-def _tables() -> _XlatMap:
+def _tables() -> _LazyMap:
+    """The fold map: separator → ' ', token char → its fold ('' if the char
+    folds away, identity string otherwise), from the probed tables."""
     with _load_tables_npz() as z:
         kinds = z["kinds"]
         folds_raw = json.loads(bytes(z["folds_json"]).decode("utf-8"))
     folds = {int(k): v for k, v in folds_raw.items()}
-    return _XlatMap(kinds, folds)
+    return _LazyMap(
+        lambda cp: folds.get(cp, chr(cp)) if cp < len(kinds) and kinds[cp] else " "
+    )
 
 
+@lru_cache(maxsize=1)
+def _marks() -> _LazyMap:
+    """The length-preserving mark map: separator → ' ', token char → itself.
+    No fold contains a space, so the runs of non-spaces in the marked text
+    are exactly the runs ``split`` sees in the folded text."""
+    table = _tables()
+    return _LazyMap(lambda cp: " " if table[cp] == " " else chr(cp))
+
+
+_RUN = re.compile(r"[^ ]+")
 _STEM_MEMO: dict[str, str] = {}
+_STEM_MEMO_CAP = 2_000_000
 
 
-def _stem_cached(tok: str) -> str:
-    s = _STEM_MEMO.get(tok)
-    if s is None:
-        s = porter_stem(tok)
-        if len(_STEM_MEMO) < 2_000_000:
-            _STEM_MEMO[tok] = s
-        else:
-            return s
-    return s
+def _stem_all(raw: list[str]) -> list[str]:
+    """Porter stems of unicode61 tokens, through the one bounded memo."""
+    memo = _STEM_MEMO
+    out = []
+    for t in raw:
+        s = memo.get(t)
+        if s is None:
+            s = porter_stem(t)
+            if len(memo) < _STEM_MEMO_CAP:
+                memo[t] = s
+        out.append(s)
+    return out
 
 
 def unicode61_tokens(text: str) -> list[str]:
@@ -109,37 +127,29 @@ def token_count(text: str) -> int:
     return len(text.translate(_tables()).split())
 
 
-def tokenize(text: str, stopwords: frozenset[str] = frozenset()) -> list[str]:
-    """Full analyzer chain: unicode61 fold/split → Porter stem.
-
-    ``stopwords`` is the north-star normalization hook; it defaults to the
-    empty set because the reference removes no stopwords (SURVEY.md §2.3 T3)
-    and rank-identity with the FTS5 oracle requires the same.
-    """
-    toks = [_stem_cached(t) for t in unicode61_tokens(text)]
-    if stopwords:
-        toks = [t for t in toks if t not in stopwords]
-    return toks
+def tokenize(text: str) -> list[str]:
+    """Full analyzer chain: unicode61 fold/split → Porter stem."""
+    return _stem_all(unicode61_tokens(text))
 
 
-def tokenize_series(texts: pd.Series, stopwords: frozenset[str] = frozenset()) -> pd.Series:
-    """Vectorized wrapper used inside pandas UDFs: Series[str] → Series[list[str]]."""
+def tokenize_series(texts: pd.Series) -> pd.Series:
+    """``tokenize`` over a pandas Series: Series[str] → Series[list[str]]."""
+    return pd.Series([tokenize(t) for t in texts], index=texts.index)
+
+
+def tokenize_spans(text: str) -> list[tuple[str, int, int]]:
+    """``(term, start, end)`` per token: the terms are ``tokenize(text)`` and
+    ``text[start:end]`` is the token's original run of characters (a run
+    whose characters all fold away yields no token, as in ``tokenize``)."""
+    if not text:
+        return []
     table = _tables()
-    memo = _STEM_MEMO
-    out = []
-    for text in texts:
-        if not text:
-            out.append([])
-            continue
-        raw = text.translate(table).split()
-        toks = []
-        for t in raw:
-            s = memo.get(t)
-            if s is None:
-                s = porter_stem(t)
-                memo[t] = s
-            toks.append(s)
-        if stopwords:
-            toks = [t for t in toks if t not in stopwords]
-        out.append(toks)
-    return pd.Series(out, index=texts.index)
+    raw: list[str] = []
+    spans: list[tuple[int, int]] = []
+    for m in _RUN.finditer(text.translate(_marks())):
+        s, e = m.span()
+        folded = text[s:e].translate(table)
+        if folded:
+            raw.append(folded)
+            spans.append((s, e))
+    return [(t, s, e) for t, (s, e) in zip(_stem_all(raw), spans)]

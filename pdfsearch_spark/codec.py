@@ -24,10 +24,6 @@ K1 = 1.2
 B = 0.75
 
 
-def zigzag(v: int) -> int:
-    return (v << 1) ^ (v >> 63)
-
-
 def unzigzag(u: int) -> int:
     return (u >> 1) ^ -(u & 1)
 
@@ -387,14 +383,5 @@ def decode_block_positions(
 
 
 def decode_positions(pos_blob: bytes, df: int) -> list[np.ndarray]:
-    """Decode per-doc position arrays (delta-decoded)."""
-    flat = varint_decode(pos_blob).astype(np.int64)
-    out: list[np.ndarray] = []
-    i = 0
-    for _ in range(df):
-        n = int(flat[i])
-        i += 1
-        p = flat[i : i + n]
-        out.append(np.cumsum(p) if n else p)
-        i += n
-    return out
+    """Decode per-doc position arrays (delta-decoded) of a whole list."""
+    return decode_block_positions(pos_blob, 0, len(pos_blob), df)

@@ -26,10 +26,6 @@ from pyspark.sql import DataFrame, functions as F
 
 N_BINS = 16
 
-MEDIA_SCHEMA = (
-    "doc_id long, media binary, media_type string, n_bytes long, checksum string"
-)
-
 
 def attach_media(docs: DataFrame) -> DataFrame:
     """Synthesize an opaque media column from the text bytes (deterministic
@@ -440,15 +436,6 @@ def decode_audio_samples(media: bytes, media_type: str) -> tuple[np.ndarray, int
         raise
     except Exception as exc:
         raise NotImplementedError(f"stdlib WAV decode failed: {exc}") from exc
-
-
-def decode_audio_fake(media: bytes) -> tuple[np.ndarray, int]:
-    """Deterministic fake: each byte is a sample centered at 128
-    ((b - 128) / 128 → [-1, 1)), nominal rate FAKE_AUDIO_RATE. Total on any
-    byte string (empty → zero samples); SQL-recomputable from the text
-    bytes, which is what makes q_audio_features DuckDB-oracle-checkable."""
-    arr = np.frombuffer(media, dtype=np.uint8).astype(np.float64)
-    return (arr - 128.0) / 128.0, FAKE_AUDIO_RATE
 
 
 def audio_features(media_df: DataFrame) -> DataFrame:

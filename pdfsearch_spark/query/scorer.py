@@ -222,17 +222,25 @@ def phrase_hits(
         all_docs = _union_positions([s.doc_ids for s in slot])
         tfs = np.zeros(len(all_docs), dtype=np.int64)
         dls = np.zeros(len(all_docs), dtype=np.int64)
-        pos: list[list[np.ndarray]] = [[] for _ in range(len(all_docs))]
+        # expansion terms carry positions only when the phrase needs them
+        # (score_shard's pos_terms); without them there is nothing to union
+        pos: list[list[np.ndarray]] | None = None
+        if any(s.lazy is not None or s.positions is not None for s in slot):
+            pos = [[] for _ in range(len(all_docs))]
         for s in slot:
             loc = np.searchsorted(all_docs, s.doc_ids)
             tfs[loc] += s.tfs
             dls[loc] = s.dls
+            if pos is None:
+                continue
             s_pos = (
                 s.lazy.fetch_all(len(s.doc_ids)) if s.lazy is not None else s.positions
             )
             if s_pos is not None:
                 for j, l in enumerate(loc):
                     pos[l].append(s_pos[j])
+        if pos is None:
+            return all_docs, tfs, dls, None
         merged_pos = [
             _union_positions(p) if p else np.zeros(0, dtype=np.int64) for p in pos
         ]
@@ -483,13 +491,14 @@ def score_shard(
             expansions[p.index] = [t for t in shard_terms if t.startswith(pref)]
 
     # positions are needed per PHRASE, not per query: a phrase needs them if
-    # it is positional itself (multi-term / anchored / prefix-in-phrase) or
-    # sits under NEAR; only ITS terms pay the position-stream decode
+    # it is positional itself (multi-term / anchored) or sits under NEAR;
+    # only ITS terms pay the position-stream decode (a plain ``pref*``
+    # counts instances from tfs alone)
     near_pis = _near_phrase_indexes(tree)
     pos_phrases = {
         p.index
         for p in phrases
-        if len(p.terms) > 1 or p.anchored or p.prefix or p.index in near_pis
+        if len(p.terms) > 1 or p.anchored or p.index in near_pis
     }
     pos_terms: set[str] = set()
     for p in phrases:
@@ -523,7 +532,7 @@ def score_shard(
         full_loc[loc] = np.arange(len(h.doc_ids))
         present[pi] = m
         locs[pi] = full_loc
-    phrase_lens = {p.index: len(p.terms) if not p.prefix else len(p.terms) for p in phrases}
+    phrase_lens = {p.index: len(p.terms) for p in phrases}
 
     mask, vis = evaluate(tree, hits, cand, tf_matrix, present, locs, phrase_lens)
     local_dfs = {pi: int(present[pi].sum()) for pi in hits}

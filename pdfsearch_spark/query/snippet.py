@@ -20,43 +20,17 @@ re-derived and golden-tested against the in-process FTS5 oracle:
    case the raw tail of the document (trailing separators included) is
    emitted instead.
 
-Runs over <= top-k rows only, inside a pandas UDF.
+Runs driver-side over the <= k rows a request emits. Each row is tokenized
+once (``analyzer.tokenize_spans``); ``snippet_pair`` hands those tokens to the
+visibility plan and to both window renders.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import numpy as np
 
-from ..analyzer import _tables
-from ..porter import stem as porter_stem
-
-
-def tokenize_offsets(text: str) -> list[tuple[str, int, int]]:
-    """(stemmed_term, start_char, end_char) per token, FTS5-identical
-    sequence (same fold tables + porter)."""
-    table = _tables()
-    out: list[tuple[str, int, int]] = []
-    n = len(text)
-    i = 0
-    while i < n:
-        cp = ord(text[i])
-        repl = table[cp]
-        if repl == " ":
-            i += 1
-            continue
-        j = i
-        folded: list[str] = []
-        while j < n:
-            r = table[ord(text[j])]
-            if r == " ":
-                break
-            folded.append(r)
-            j += 1
-        term = "".join(folded)
-        if term:
-            out.append((porter_stem(term), i, j))
-        i = j if j > i else i + 1
-    return out
+from ..analyzer import tokenize_spans
+from .scorer import PhraseHits, evaluate, near_surviving
 
 
 def find_phrase_instances(
@@ -144,11 +118,30 @@ def make_snippet(
     ellips: str = "...",
     per_phrase: list[list[tuple[int, int]]] | None = None,
 ) -> str:
-    toks = tokenize_offsets(text)
-    n_docsize = len(toks)
-    terms = [t[0] for t in toks]
+    toks = tokenize_spans(text)
     if per_phrase is None:
-        per_phrase = find_phrase_instances(terms, phrase_slots, anchored)
+        per_phrase = find_phrase_instances([t for t, _, _ in toks], phrase_slots, anchored)
+    return _snippet(text, toks, per_phrase, n, open_m, close_m, ellips)
+
+
+def snippet_pair(tree, slots_list, anchored, text: str) -> tuple[str, str]:
+    """The reference's two snippets of one result row, snippet(…,16) and
+    snippet(…,60), from one tokenization of ``text``."""
+    toks = tokenize_spans(text)
+    _, _, per_phrase = _plan(tree, slots_list, anchored, toks)
+    return _snippet(text, toks, per_phrase, 16), _snippet(text, toks, per_phrase, 60)
+
+
+def _snippet(
+    text: str,
+    toks: list[tuple[str, int, int]],
+    per_phrase: list[list[tuple[int, int]]],
+    n: int,
+    open_m: str = "<b>",
+    close_m: str = "</b>",
+    ellips: str = "...",
+) -> str:
+    n_docsize = len(toks)
     # xInst order: by position, phrase index as tiebreak
     instances = sorted(
         (s, pi, e) for pi, inst in enumerate(per_phrase) for (s, e) in inst
@@ -236,18 +229,6 @@ def _render(
     return "".join(out)
 
 
-def snippet_series(
-    texts: pd.Series,
-    phrase_slots: list[list[frozenset[str]]],
-    anchored: list[bool],
-    n: int,
-) -> pd.Series:
-    return pd.Series(
-        [make_snippet(t or "", phrase_slots, anchored, n) for t in texts],
-        index=texts.index,
-    )
-
-
 class PrefixSet:
     """Set-like slot matcher for prefix phrases: contains every term starting
     with ``prefix``. Lets the snippet path highlight ``pref*`` matches in the
@@ -300,13 +281,12 @@ def snippet_plan(
       instance outside every valid near-combination is not marked).
     Reuses scorer.evaluate over a one-row frame and the scorer's
     near_surviving, so snippets can never drift from scoring semantics."""
-    import numpy as np
+    return _plan(tree, slots_list, anchored, tokenize_spans(text))
 
-    from .scorer import PhraseHits, evaluate, near_surviving
 
-    toks = tokenize_offsets(text)
-    terms = [t for t, _, _ in toks]
-    per_phrase = find_phrase_instances(terms, slots_list, anchored)
+def _plan(tree, slots_list, anchored, toks) -> tuple[list, list, list]:
+    """snippet_plan over an already tokenized row."""
+    per_phrase = find_phrase_instances([t for t, _, _ in toks], slots_list, anchored)
     P = len(slots_list)
     cand = np.zeros(1, dtype=np.int64)
     tf_matrix = np.zeros((1, P), dtype=np.int64)

@@ -87,9 +87,15 @@ class SearchEngine:
         # versioned-root commit): this engine is bound to one complete
         # epoch snapshot for its lifetime
         self.epoch = int(st["epoch"])
+        # readers see committed segments only: a refresh that crashed before
+        # its stats commit leaves an orphan segment ``n_segments`` on disk
+        # whose postings would otherwise match and count toward df while
+        # ``n_docs`` leaves its docs out (``segment`` is a partition
+        # column, so this filter prunes directories and costs nothing)
+        committed = F.col("segment") < int(st["n_segments"])
         self._postings = spark.read.parquet(
             table_dir(index_dir, "postings", self.epoch)
-        )
+        ).filter(committed)
         # The term dictionary is every query's first hop (df lookup). It is
         # the postings table's own (term, df) metadata columns — format 6
         # materializes no separate term_stats table — read with the same
@@ -102,7 +108,7 @@ class SearchEngine:
         self._dict = self._postings.select("term", "df")
         self._doc_text = spark.read.parquet(
             table_dir(index_dir, "doc_text", self.epoch)
-        )
+        ).filter(committed)
         # Driver-side df cache. An engine is bound to one index snapshot
         # (Spark caches the parquet file listing at first action; a refresh
         # needs a new SearchEngine), so term→df results are immutable for
@@ -384,17 +390,11 @@ class SearchEngine:
         whose branch contributes nothing for that row (fuzz-found via
         '(a OR b) AND c OR d': a doc matching a∧d but not c highlights only
         d)."""
-        from .query.snippet import make_snippet, phrase_slot_table, snippet_plan
+        from .query.snippet import phrase_slot_table, snippet_pair
 
         slots_list, anchored = phrase_slot_table(phrases, {})
-        titles: list[str] = []
-        bodies: list[str] = []
-        for text in texts:
-            text = text or ""
-            fs, fa, fi = snippet_plan(tree, slots_list, anchored, text)
-            titles.append(make_snippet(text, fs, fa, 16, per_phrase=fi))
-            bodies.append(make_snippet(text, fs, fa, 60, per_phrase=fi))
-        return titles, bodies
+        pairs = [snippet_pair(tree, slots_list, anchored, text or "") for text in texts]
+        return [t for t, _ in pairs], [b for _, b in pairs]
 
 
 def _plain_terms(tree: Node, phrases: list[Phrase]) -> bool:

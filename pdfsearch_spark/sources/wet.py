@@ -20,8 +20,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from pdfsearch_spark.sources.warc import read_warc, warc_bytes
 
-WET_SCHEMA = "url string, text string, n_chars long"
-
 
 def wet_bytes(docs: list[dict]) -> bytes:
     """Serialize docs (dicts with url/text) to WET bytes — conversion

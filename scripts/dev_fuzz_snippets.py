@@ -97,9 +97,11 @@ def main() -> None:
             continue
         if tree is None or not res:
             continue
-        # EXACTLY the production path (SearchEngine._snippet_pair):
-        # slot table -> per-doc snippet_plan (scorer-driven phrase
-        # visibility + NEAR-survivor filtering) -> make_snippet
+        # the production path's steps (SearchEngine._snippet_pair ->
+        # snippet.snippet_pair), through their public wrappers so a
+        # mismatch can be re-rendered with phrases dropped: slot table ->
+        # per-doc snippet_plan (scorer-driven phrase visibility +
+        # NEAR-survivor filtering) -> make_snippet
         slots_list, anchored = phrase_slot_table(phrases, {})
         n_queries_run += 1
         for r in res:

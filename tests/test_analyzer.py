@@ -62,8 +62,15 @@ def test_per_doc_token_multiset(corpus_pdf, oracle):
         assert got == want, f"doc {url}: multiset mismatch"
 
 
-def test_token_count_matches_tokenize():
-    from pdfsearch_spark.analyzer import token_count, tokenize
+def test_token_count_matches_tokenize(corpus_pdf):
+    """token_count and the span form agree with tokenize: the span terms are
+    tokenize(text), each span's characters tokenize to exactly its term, the
+    text between spans tokenizes to nothing, and each span is a maximal run
+    (the characters just outside it are separators)."""
+    from pdfsearch_spark.analyzer import token_count, tokenize, tokenize_spans
+
+    def separates(c):
+        return token_count(f"a{c}a") == 2
 
     cases = [
         "",
@@ -72,6 +79,18 @@ def test_token_count_matches_tokenize():
         "coöperate naïve Zürich\nsecond line\t tabs",
         "†‡• only-seps ———",
         "mixed ASCII và tiếng Việt 漢字 кирилица",
+        "\u0301a\u0301b \u0301\u0301 c",
     ]
-    for s in cases:
-        assert token_count(s) == len(tokenize(s)), repr(s)
+    for s in cases + [u[0] for u in UNIT_CASES] + list(corpus_pdf["text"]):
+        toks = tokenize(s)
+        assert token_count(s) == len(toks), repr(s)
+        spans = tokenize_spans(s)
+        assert [t for t, _, _ in spans] == toks, repr(s)
+        prev = 0
+        for term, start, end in spans:
+            assert tokenize(s[start:end]) == [term], (repr(s), start, end)
+            assert start == 0 or separates(s[start - 1]), (repr(s), start)
+            assert end == len(s) or separates(s[end]), (repr(s), end)
+            assert tokenize(s[prev:start]) == [], (repr(s), prev, start)
+            prev = end
+        assert tokenize(s[prev:]) == [], (repr(s), prev)

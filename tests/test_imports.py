@@ -49,3 +49,65 @@ def test_package_imports_resolve(path):
         f"{m}.{n}" if n else m for m, n in _package_imports(path) if not _resolves(m, n)
     ]
     assert not missing, f"{path.name} imports names the package no longer has: {missing}"
+
+
+PACKAGE = ROOT / "pdfsearch_spark"
+REFERRERS = sorted(
+    [*PACKAGE.rglob("*.py"), *ROOT.glob("tests/*.py"), *FILES]
+)
+
+
+def _defined_names(stmt: ast.stmt) -> list[str]:
+    """Top-level function, class and constant names a statement defines."""
+    if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        names = [stmt.name]
+    elif isinstance(stmt, ast.Assign):
+        names = [t.id for t in stmt.targets if isinstance(t, ast.Name)]
+    elif isinstance(stmt, ast.AnnAssign) and isinstance(stmt.target, ast.Name):
+        names = [stmt.target.id]
+    else:
+        names = []
+    return [n for n in names if not (n.startswith("__") and n.endswith("__"))]
+
+
+def _referenced_names(stmt: ast.stmt) -> set[str]:
+    """Names a statement reads: loads, attribute names, imported names and
+    the strings of an ``__all__`` list."""
+    out: set[str] = set()
+    for node in ast.walk(stmt):
+        if isinstance(node, ast.Name) and not isinstance(node.ctx, ast.Store):
+            out.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            out.add(node.attr)
+        elif isinstance(node, ast.alias):
+            out.add(node.name.rsplit(".", 1)[-1])
+    if isinstance(stmt, ast.Assign) and any(
+        isinstance(t, ast.Name) and t.id == "__all__" for t in stmt.targets
+    ):
+        out |= {
+            n.value for n in ast.walk(stmt.value)
+            if isinstance(n, ast.Constant) and isinstance(n.value, str)
+        }
+    return out
+
+
+def test_no_dead_definitions():
+    """Every top-level function, class and constant of the package is
+    referenced outside its own definition: by the package, the tests, the
+    dev scripts, the benches or the driver entry. Files are parsed, not
+    executed."""
+    defined: list[tuple[str, Path, int]] = []
+    refs: dict[str, set[tuple[Path, int]]] = {}
+    for path in REFERRERS:
+        body = ast.parse(path.read_text(), filename=str(path)).body
+        for i, stmt in enumerate(body):
+            if path.is_relative_to(PACKAGE):
+                defined += [(n, path, i) for n in _defined_names(stmt)]
+            for n in _referenced_names(stmt):
+                refs.setdefault(n, set()).add((path, i))
+    dead = [
+        f"{path.relative_to(ROOT)}:{name}"
+        for name, path, i in defined
+        if not refs.get(name, set()) - {(path, i)}
+    ]
+    assert not dead, f"defined but never referenced: {dead}"

@@ -290,6 +290,8 @@ def test_compaction_skips_uncommitted_segment(spark, oracle, refreshed):
     finally:
         index_build._write_stats = real_write_stats
     assert os.path.exists(os.path.join(side, "doc_text", "segment=2"))
+    # readers see committed segments only: the orphan adds no matches or df
+    assert _shape_results(spark, side) == before
 
     res = compact_index(spark, side)
     assert res["compacted"] is True

@@ -202,6 +202,42 @@ def test_result_shape_and_join(engine, corpus_pdf):
         assert r["part"] == 0
 
 
+@pytest.mark.parametrize("q", ["co*", "co* OR bogu"])
+def test_plain_prefix_reads_no_positions(index_dir, q):
+    """A plain ``pref*`` counts its instances from tfs alone: score_shard
+    returns the same result when every posting row's position stream is
+    empty, so none is decoded."""
+    import numpy as np
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+
+    from pdfsearch_spark.analyzer import tokenize, unicode61_tokens
+    from pdfsearch_spark.index_build import table_dir
+    from pdfsearch_spark.query.parser import parse_query
+    from pdfsearch_spark.query.scorer import score_shard
+
+    epoch = int(ds.dataset(index_dir + "/stats").to_table().to_pylist()[0]["epoch"])
+    term = ds.field("term")
+    rows = (
+        ds.dataset(table_dir(index_dir, "postings", epoch), partitioning="hive")
+        .to_table(filter=pc.starts_with(term, pattern="co") | (term == "bogu"))
+        .to_pandas()
+    )
+    tree, phrases = parse_query(q, tokenize, unicode61_tokens)
+    n_matched = 0
+    for _, shard in rows.groupby("shard"):
+        shard = shard.reset_index(drop=True)
+        want = score_shard(shard, tree, phrases, {}, 0, 0.0, None, 0)
+        got = score_shard(shard.assign(pos_blob=[b""] * len(shard)), tree, phrases, {}, 0, 0.0, None, 0)
+        assert (got is None) == (want is None)
+        if want is not None:
+            for g, w in zip(got[:3], want[:3]):
+                np.testing.assert_array_equal(g, w)
+            assert got[3] == want[3]
+            n_matched += len(want[0])
+    assert n_matched > 0
+
+
 @pytest.mark.parametrize("q", ["b*", "s* OR r*", '"renal f*"', "NEAR(run d*, 5)"])
 def test_high_fanout_prefix_rank_identical(engine, oracle, q):
     """Web-scale prefix shapes: single-letter prefixes expand to a large

@@ -71,3 +71,23 @@ def test_engine_snippets_end_to_end(engine, oracle):
             assert r["title"] == wt, f"q={q!r} doc={r['doc_id']} title"
             assert r["text"] == wx, f"q={q!r} doc={r['doc_id']} text"
             assert r["base_name"] == wb
+
+
+def test_snippets_tokenize_each_row_once(engine, monkeypatch):
+    """A request with snippets tokenizes each returned row once: the
+    visibility plan and both windows share that one tokenization."""
+    from pdfsearch_spark.query import snippet
+
+    calls = []
+    real = snippet.tokenize_spans
+
+    def counting(text):
+        calls.append(text)
+        return real(text)
+
+    monkeypatch.setattr(snippet, "tokenize_spans", counting)
+    for q in ["bogu", "co* OR ceed", '"bogu ceed"', "NEAR(bogu ceed, 8)"]:
+        calls.clear()
+        rows = engine.search(q, k=50, with_snippets=True).collect()
+        assert rows, q
+        assert len(calls) == len(rows), q
